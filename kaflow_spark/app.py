@@ -791,10 +791,38 @@ class App:
         """foreachBatch body: run the compiled graph per micro-batch."""
 
         def body(batch_df: DataFrame, batch_id: int) -> None:
-            out, dlq = self.process_batch(batch_df)
-            self._write_outputs(out, dlq)
+            # the Kafka sink reads the batch once per sink topic, and
+            # once more for the DLQ topic
+            sinks = sum(len(r.sink_topics) for r in self._consumers.values())
+            reuse = self.dlq_topic is not None or sinks > 1
+            self._run_micro_batch(batch_df, self._write_outputs, reuse)
 
         return body
+
+    def _run_micro_batch(
+        self,
+        batch_df: DataFrame,
+        write: Callable[[DataFrame, DataFrame], None],
+        reuse: bool,
+    ) -> None:
+        """The per-micro-batch body of run_stream and run_replay. With
+        ``reuse`` (``write`` reads the batch more than once) the
+        envelope is persisted once, so every topic branch and the DLQ
+        read it instead of re-running the source scan and decode, and
+        the staged frames are persisted via ``_cache_into``, so each
+        user handler runs once per record; everything is unpersisted
+        once ``write`` returns or raises. Without it the batch is read
+        once and a cache would only add a materialisation."""
+        cached: list[DataFrame] | None = None
+        if reuse:
+            batch_df = batch_df.persist()
+            cached = [batch_df]
+        try:
+            out, dlq = self.process_batch(batch_df, _cache_into=cached)
+            write(out, dlq)
+        finally:
+            for f in cached or ():
+                f.unpersist()
 
     # --------------------------------------------- archive replay path
 
@@ -806,8 +834,8 @@ class App:
         source yields and the standard Kafka→object-store archival
         jobs write). ``fmt="parquet"`` reads columnar archives;
         ``fmt="segments"`` reads Kafka-style binary segment files
-        through the Python DataSource (sources/kafka_segment.py —
-        per-file executor partitions, file-index offsets). The SAME
+        through Spark's file stream and one Arrow decode
+        (sources/kafka_segment.stream_segments). The SAME
         consume→transform→fan-out→DLQ graph runs over either, so
         reprocessing history needs no broker: this is the replay/
         backfill half of the reference's consume-loop story
@@ -849,14 +877,12 @@ class App:
         write_dlq = batch_keyed_parquet_writer(f"{output_dir}/dlq")
 
         def write(batch_df: DataFrame, batch_id: int) -> None:
-            cached: list[DataFrame] = []
-            out, dlq = self.process_batch(batch_df, _cache_into=cached)
-            try:
+            def write_both(out: DataFrame, dlq: DataFrame) -> None:
                 write_out(out, batch_id)
                 write_dlq(dlq, batch_id)
-            finally:
-                for f in cached:
-                    f.unpersist()
+
+            # outputs and dead letters are two writes of one batch
+            self._run_micro_batch(batch_df, write_both, reuse=True)
 
         body = IdempotentBatchWriter(f"{checkpoint}/replay-commits", write)
         stream = self.replay_stream(spark, archive_path, fmt)

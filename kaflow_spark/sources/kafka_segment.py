@@ -1,39 +1,46 @@
-"""Spark 4 Python DataSource over Kafka-style segment archives.
+"""Kafka-style segment archives as Spark frames, batch and stream.
 
-Batch AND streaming reader for the `segments.py` format, registered as
-``format("kafka_segment")``. This is the broker-less stand-in for the
-reference's live Kafka source (`kaflow/applications.py` consumer): the
-envelope schema is ENVELOPE_DDL, so the frames drop straight into
-`App.process_batch` / `App.process_stream`.
+One Arrow decoder (`decode_segment`, over `segments.iter_buffer`)
+serves both halves, and the frames are ENVELOPE_DDL-shaped, so they
+drop straight into `App.process_batch` / `App.run_replay`. This is the
+broker-less stand-in for the reference's live Kafka source
+(`kaflow/applications.py` consumer).
 
-Scale design:
-- one InputPartition per segment FILE — on a cluster each executor
-  reads its own files; no driver-side data movement (the driver reads
-  only the few-byte per-file headers for planning);
+Batch, ``spark.read.format("kafka_segment")`` (`read_segments`): a
+Spark 4 Python DataSource with one InputPartition per segment FILE, so
+on a cluster each executor reads its own files and the driver reads
+only the few-byte per-file headers for planning.
 - topic-equality/IN pushdown skips whole files at planning time
   (`pushFilters`), the custom-source analog of partition pruning;
 - offset/timestamp range predicates skip files whose sidecar min/max
   index (`segments.write_index` — the analog of a Kafka segment's
   .index/.timeindex) proves no overlap; the predicates stay in the
   plan for row-level re-application, exactly like parquet row-group
-  pruning;
-- streaming offsets are {"idx": N} over the lexicographically sorted
-  file list: append-only archives advance the index, a restart resumes
-  from the checkpointed index, and `readBetweenOffsets` re-reads an
-  exact file span deterministically -> exactly-once replay per record.
+  pruning.
+
+Stream (`stream_segments`): Spark's own file stream,
+``readStream.format("binaryFile")`` over ``*.seg``, followed by one
+``mapInArrow`` decode. The JVM source lists the archive and records
+every file it hands out in the checkpoint's file log, so a restart
+reads only files it has not seen -> exactly-once replay per record
+over an append-only archive. binaryFile reads each file whole into
+one value, which caps a streamed segment file at 2 GiB (Kafka's
+default segment size is 1 GiB).
 """
 
 from __future__ import annotations
 
 import datetime as _dt
+import itertools
+import os
 from collections.abc import Iterator, Sequence
 from dataclasses import dataclass
 from typing import Any
 
+import pyarrow as pa
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
-    DataSourceStreamReader,
     DataSourceWriter,
     EqualTo,
     Filter,
@@ -49,53 +56,54 @@ from pyspark.sql.types import StructType
 
 from kaflow_spark.message import ENVELOPE_DDL
 from kaflow_spark.sources.segments import (
-    iter_segment,
+    iter_buffer,
     list_segments,
     read_header,
     read_index,
 )
 
-
-def _ts(ms: int) -> _dt.datetime:
-    """ms-since-epoch -> naive UTC datetime (session TZ is UTC)."""
-    return _dt.datetime.fromtimestamp(ms / 1000.0, tz=_dt.timezone.utc).replace(
-        tzinfo=None
-    )
-
-
-# canonical envelope column order; the `columns` option may list any
-# subset (any order) and the emitted schema keeps THIS order so the
-# frame shape is deterministic regardless of how the option was written
-_ENVELOPE_FIELDS: tuple[tuple[str, str], ...] = (
-    ("topic", "string"),
-    ("partition", "int"),
-    ("offset", "bigint"),
-    ("timestamp", "timestamp"),
-    ("timestamp_type", "int"),
-    ("key", "binary"),
-    ("value", "binary"),
-    ("headers", "array<struct<key: string, value: binary>>"),
-)
+# canonical envelope column order, with each column's DDL and Arrow
+# type; the `columns` option may list any subset (any order) and the
+# emitted schema keeps THIS order so the frame shape is deterministic
+# regardless of how the option was written
+_ENVELOPE_FIELDS: dict[str, tuple[str, pa.DataType]] = {
+    "topic": ("string", pa.string()),
+    "partition": ("int", pa.int32()),
+    "offset": ("bigint", pa.int64()),
+    "timestamp": ("timestamp", pa.timestamp("us", tz="UTC")),
+    "timestamp_type": ("int", pa.int32()),
+    "key": ("binary", pa.binary()),
+    "value": ("binary", pa.binary()),
+    "headers": (
+        "array<struct<key: string, value: binary>>",
+        pa.list_(pa.struct([("key", pa.string()), ("value", pa.binary())])),
+    ),
+}
 _PAYLOAD_COLS = {"key", "value", "headers"}
+# records per Arrow batch: bounds the Python objects alive per file
+_BATCH_RECORDS = 10_000
 
 
 def _parse_columns(options: dict) -> list[str] | None:
     """Validated, canonically-ordered projection from the ``columns``
-    option, or None for the full envelope."""
+    option, or None for the full envelope. This is the explicit
+    pruning path: this Spark build's Python DataSource API does not
+    forward Catalyst's column pruning to the reader (reader() receives
+    the full schema and BatchScan lists every column even under a
+    narrow Project)."""
     raw = options.get("columns")
     if raw is None:
         return None
     want = {c.strip() for c in str(raw).split(",") if c.strip()}
-    known = {n for n, _ in _ENVELOPE_FIELDS}
-    bad = want - known
+    bad = want - set(_ENVELOPE_FIELDS)
     if bad:
         raise ValueError(
             f"kafka_segment: unknown columns {sorted(bad)}; "
-            f"envelope columns are {sorted(known)}"
+            f"envelope columns are {sorted(_ENVELOPE_FIELDS)}"
         )
     if not want:
         raise ValueError("kafka_segment: columns option is empty")
-    return [n for n, _ in _ENVELOPE_FIELDS if n in want]
+    return [n for n in _ENVELOPE_FIELDS if n in want]
 
 
 def _parse_corrupt(options: dict, columns: list[str] | None) -> str:
@@ -118,48 +126,39 @@ def _parse_corrupt(options: dict, columns: list[str] | None) -> str:
     return "record" if marker_visible else "raise"
 
 
-def _rows(
-    path: str, columns: list[str] | None = None, corrupt: str = "record"
-) -> Iterator[tuple]:
-    """Decoded rows in envelope (or projected) column order. A
-    metadata-only projection (no key/value/headers) walks record
-    length prefixes without materializing payload bytes — the
-    explicit column-pruning path, since this Spark build's Python
-    DataSource API does not forward Catalyst's column pruning to the
-    reader (verified: reader() receives the full schema and BatchScan
-    lists every column even under a narrow Project)."""
-    payload = columns is None or bool(set(columns) & _PAYLOAD_COLS)
-    # corrupt="record": a torn tail becomes ONE sentinel envelope row
-    # (CORRUPT_HEADER + raw bytes) that process_batch DLQ-routes,
-    # instead of an exception killing the whole batch/micro-batch;
-    # corrupt="raise" fails fast (the default when the projection
-    # strips the headers marker — see _parse_corrupt)
-    for topic, part, offset, ts_ms, tstype, key, value, headers in iter_segment(
-        path, payload=payload, corrupt=corrupt
-    ):
-        full = {
-            "topic": topic,
-            "partition": part,
-            "offset": offset,
-            "timestamp": _ts(ts_ms),
-            "timestamp_type": tstype,
-            "key": key,
-            "value": value,
-            "headers": headers,
-        }
-        if columns is None:
-            yield (
-                topic,
-                part,
-                offset,
-                full["timestamp"],
-                tstype,
-                key,
-                value,
-                headers,
-            )
-        else:
-            yield tuple(full[c] for c in columns)
+def decode_segment(
+    buf: bytes,
+    path: str,
+    columns: list[str] | None = None,
+    corrupt: str = "record",
+) -> Iterator[pa.RecordBatch]:
+    """Arrow batches, in envelope (or projected, canonical) column
+    order, of one whole segment file held in ``buf``. A projection
+    without key/value/headers walks record length prefixes only and
+    never materializes payload bytes. ``corrupt="record"`` turns a
+    torn tail into one CORRUPT_HEADER sentinel row that
+    `App.process_batch` DLQ-routes, instead of an exception killing
+    the whole batch/micro-batch (see `segments.iter_buffer`)."""
+    names = columns or list(_ENVELOPE_FIELDS)
+    schema = pa.schema([(n, _ENVELOPE_FIELDS[n][1]) for n in names])
+    records = iter_buffer(
+        buf, path, payload=bool(_PAYLOAD_COLS & set(names)), corrupt=corrupt
+    )
+    while chunk := list(itertools.islice(records, _BATCH_RECORDS)):
+        cols = dict(zip(_ENVELOPE_FIELDS, zip(*chunk)))
+        if "timestamp" in names:
+            cols["timestamp"] = [ms * 1000 for ms in cols["timestamp"]]
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(cols[n], f.type) for n, f in zip(names, schema)],
+            schema=schema,
+        )
+
+
+def _decode_files(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    """``mapInArrow`` body over binaryFile rows (path, content)."""
+    for batch in batches:
+        for row in batch.to_pylist():
+            yield from decode_segment(row["content"], row["path"])
 
 
 @dataclass
@@ -181,26 +180,16 @@ def _topics_from_filters(filters: Sequence[Filter]) -> set[str] | None:
     return allowed
 
 
-def _to_ms_floor(v: Any) -> int:
-    """Filter literal -> ms-since-epoch, rounded DOWN (conservative
-    lower bound). Naive datetimes are session-TZ UTC."""
-    if isinstance(v, _dt.datetime):
-        if v.tzinfo is None:
-            v = v.replace(tzinfo=_dt.timezone.utc)
-        us = int(v.timestamp() * 1_000_000)
-        return us // 1000
-    return int(v)
-
-
-def _to_ms_ceil(v: Any) -> int:
-    """Filter literal -> ms-since-epoch, rounded UP (conservative
-    upper bound)."""
-    if isinstance(v, _dt.datetime):
-        if v.tzinfo is None:
-            v = v.replace(tzinfo=_dt.timezone.utc)
-        us = int(v.timestamp() * 1_000_000)
-        return -((-us) // 1000)
-    return int(v)
+def _to_ms(v: Any, ceil: bool = False) -> int:
+    """Filter literal -> ms-since-epoch, rounded down (or up with
+    ``ceil``) so the bound stays conservative. Naive datetimes are
+    session-TZ UTC."""
+    if not isinstance(v, _dt.datetime):
+        return int(v)
+    if v.tzinfo is None:
+        v = v.replace(tzinfo=_dt.timezone.utc)
+    us = int(v.timestamp() * 1_000_000)
+    return -((-us) // 1000) if ceil else us // 1000
 
 
 def _bounds_from_filters(
@@ -228,17 +217,17 @@ def _bounds_from_filters(
             continue  # unexpected literal type: never skip on it
         lo, hi = bounds.get(col, (None, None))
         if isinstance(f, EqualTo):
-            flo = _to_ms_floor(f.value) if is_ts else int(f.value)
-            fhi = _to_ms_ceil(f.value) if is_ts else int(f.value)
+            flo = _to_ms(f.value) if is_ts else int(f.value)
+            fhi = _to_ms(f.value, ceil=True) if is_ts else int(f.value)
             lo = flo if lo is None else max(lo, flo)
             hi = fhi if hi is None else min(hi, fhi)
         elif isinstance(f, (GreaterThan, GreaterThanOrEqual)):
-            flo = _to_ms_floor(f.value) if is_ts else int(f.value)
+            flo = _to_ms(f.value) if is_ts else int(f.value)
             if isinstance(f, GreaterThan) and not is_ts:
                 flo += 1  # exact for integer offsets; ts stays widened
             lo = flo if lo is None else max(lo, flo)
         else:  # LessThan / LessThanOrEqual
-            fhi = _to_ms_ceil(f.value) if is_ts else int(f.value)
+            fhi = _to_ms(f.value, ceil=True) if is_ts else int(f.value)
             if isinstance(f, LessThan) and not is_ts:
                 fhi -= 1
             hi = fhi if hi is None else min(hi, fhi)
@@ -303,42 +292,12 @@ class SegmentBatchReader(DataSourceReader):
         # empty archives still need one no-op partition
         return [SegmentPartition(p) for p in paths] or [SegmentPartition("")]
 
-    def read(self, partition: SegmentPartition) -> Iterator[tuple]:
+    def read(self, partition: SegmentPartition) -> Iterator[pa.RecordBatch]:
         if not partition.path:
             return iter(())
-        return _rows(partition.path, self.columns, self.corrupt)
-
-
-class SegmentStreamReader(DataSourceStreamReader):
-    """File-index offsets over the sorted archive listing; each
-    micro-batch plans one InputPartition per newly-appeared file, so
-    record decoding happens on EXECUTORS (the driver only lists the
-    directory). A restart resumes from the checkpointed index and
-    re-plans the exact same file span — exactly-once replay per
-    record over an append-only archive."""
-
-    def __init__(self, options: dict) -> None:
-        self.directory = options["path"]
-        self.columns = _parse_columns(options)
-        self.corrupt = _parse_corrupt(options, self.columns)
-
-    def initialOffset(self) -> dict:
-        return {"idx": 0}
-
-    def latestOffset(self) -> dict:
-        return {"idx": len(list_segments(self.directory))}
-
-    def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
-        paths = list_segments(self.directory)[start["idx"] : end["idx"]]
-        return [SegmentPartition(p) for p in paths] or [SegmentPartition("")]
-
-    def read(self, partition: SegmentPartition) -> Iterator[tuple]:
-        if not partition.path:
-            return iter(())
-        return _rows(partition.path, self.columns, self.corrupt)
-
-    def commit(self, end: dict) -> None:
-        pass  # archives are immutable; nothing to clean up
+        with open(partition.path, "rb") as f:
+            buf = f.read()
+        return decode_segment(buf, partition.path, self.columns, self.corrupt)
 
 
 @dataclass
@@ -349,10 +308,12 @@ class SegmentCommit(WriterCommitMessage):
 class SegmentWriter(DataSourceWriter):
     """``df.write.format("kafka_segment")`` — each task groups its rows
     by (topic, partition) and writes one segment file per group, named
-    ``{topic}-{partition}-{taskId}.seg`` so concurrent tasks never
-    collide. Executor-side, no driver data movement; `abort` deletes
-    every file the failed attempt reported. Rows must be envelope-
-    shaped (ENVELOPE_DDL) — exactly what the batch/stream readers and
+    ``{taskId}-{topic}-{partition}.seg`` so concurrent tasks never
+    collide and no name starts with ``_`` or ``.`` (Kafka topics such
+    as ``_schemas`` do, and `stream_segments` refuses such names).
+    Executor-side, no driver data movement; `abort` deletes every file
+    the failed attempt reported. Rows must be envelope-shaped
+    (ENVELOPE_DDL) — exactly what the batch/stream readers and
     `App.process_batch` produce/consume."""
 
     def __init__(self, options: dict, overwrite: bool) -> None:
@@ -360,8 +321,6 @@ class SegmentWriter(DataSourceWriter):
         self.overwrite = overwrite
 
     def write(self, iterator: Iterator) -> "SegmentCommit":
-        import os
-
         from pyspark import TaskContext
 
         from kaflow_spark.sources.segments import write_segment
@@ -389,7 +348,7 @@ class SegmentWriter(DataSourceWriter):
         os.makedirs(self.directory, exist_ok=True)
         paths = []
         for (topic, part), recs in sorted(groups.items()):
-            p = os.path.join(self.directory, f"{topic}-{part}-{tid:05d}.seg")
+            p = os.path.join(self.directory, f"{tid:05d}-{topic}-{part}.seg")
             write_segment(p, topic, part, recs)
             paths.append(p)
         return SegmentCommit(tuple(paths))
@@ -398,8 +357,6 @@ class SegmentWriter(DataSourceWriter):
         pass  # files are final on task success
 
     def abort(self, messages: list) -> None:
-        import os
-
         for m in messages:
             if m is None:
                 continue
@@ -412,9 +369,9 @@ class SegmentWriter(DataSourceWriter):
 
 
 class KafkaSegmentDataSource(DataSource):
-    """``spark.read.format("kafka_segment").option("path", dir)`` and
-    the same via ``readStream`` — envelope-schema records from a
-    segment archive directory."""
+    """``spark.read.format("kafka_segment").option("path", dir)`` —
+    envelope-schema records from a segment archive directory (streams
+    go through `stream_segments`)."""
 
     @classmethod
     def name(cls) -> str:
@@ -424,14 +381,10 @@ class KafkaSegmentDataSource(DataSource):
         cols = _parse_columns(dict(self.options))
         if cols is None:
             return ENVELOPE_DDL
-        types = dict(_ENVELOPE_FIELDS)
-        return ", ".join(f"{c} {types[c]}" for c in cols)
+        return ", ".join(f"{c} {_ENVELOPE_FIELDS[c][0]}" for c in cols)
 
     def reader(self, schema: StructType) -> SegmentBatchReader:
         return SegmentBatchReader(dict(self.options))
-
-    def streamReader(self, schema: StructType) -> SegmentStreamReader:
-        return SegmentStreamReader(dict(self.options))
 
     def writer(self, schema: StructType, overwrite: bool) -> SegmentWriter:
         return SegmentWriter(dict(self.options), overwrite)
@@ -472,7 +425,40 @@ def read_segments(
     return r.load()
 
 
+_BINARY_FILE_DDL = "path string, modificationTime timestamp, length bigint, content binary"
+
+
 def stream_segments(spark: Any, directory: str):
-    """Streaming envelope frame from a segment archive."""
-    register(spark)
-    return spark.readStream.format("kafka_segment").option("path", directory).load()
+    """Streaming envelope frame from a segment archive: Spark's file
+    stream over the ``*.seg`` files, decoded by one ``mapInArrow``.
+    ``maxFileAge`` is lifted to Spark's own no-limit value because the
+    7-day default would silently skip a file appended after a restart
+    whose mtime is a week older than the newest file already seen —
+    archived segments keep their original mtimes.
+
+    The stream must read exactly the files `list_segments` lists, but
+    Spark's listing hides names starting with ``_`` or ``.`` and
+    descends into subdirectories. So the archive must be flat, with no
+    such names (`SegmentWriter` never writes one): a ValueError at
+    start names any ``.seg`` file that breaks this, and one appended
+    later with such a name is never read."""
+    bad = []
+    for root, dirs, files in os.walk(directory):
+        dirs[:] = [d for d in dirs if d[0] not in "._"]  # hidden from both
+        for f in files:
+            if f.endswith(".seg") and (root != directory or f[0] in "._"):
+                bad.append(os.path.join(root, f))
+    if bad:
+        raise ValueError(
+            f"stream_segments: {directory} must be a flat archive without "
+            f"'_'/'.'-prefixed .seg names; found {sorted(bad)}"
+        )
+    return (
+        spark.readStream.format("binaryFile")
+        .schema(_BINARY_FILE_DDL)
+        .option("pathGlobFilter", "*.seg")
+        .option("maxFileAge", f"{2**63 - 1}ms")
+        .load(directory)
+        .select("path", "content")
+        .mapInArrow(_decode_files, ENVELOPE_DDL)
+    )

@@ -1,13 +1,12 @@
 """Kafka-style segment archive files (pure-python format layer).
 
 The reference consumes live Kafka topics (`kaflow/applications.py` —
-aiokafka consumer). In this sandbox there is no broker, so the durable
-equivalent is a *segment archive*: a directory of append-only binary
-files, one topic-partition span per file, holding full record
-envelopes (offset, timestamp, key, value, headers) — the same shape a
-Kafka log segment stores on a broker's disk. `kafka_segment.py` exposes
-these through Spark 4's Python DataSource API as both a batch and a
-streaming source.
+aiokafka consumer). Without a broker, the durable equivalent is a
+*segment archive*: a directory of append-only binary files, one
+topic-partition span per file, holding full record envelopes (offset,
+timestamp, key, value, headers) — the same shape a Kafka log segment
+stores on a broker's disk. `kafka_segment.py` decodes them to Arrow
+for both its batch reader and its file stream.
 
 Format (all integers big-endian):
 
@@ -165,17 +164,31 @@ def read_index(path: str) -> tuple[int, int, int, int, int] | None:
         return None
 
 
+def parse_header(buf: bytes, path: str) -> tuple[str, int, int]:
+    """(topic, partition, data_offset) from the leading bytes of a
+    segment file."""
+    if buf[: len(MAGIC)] != MAGIC:
+        raise ValueError(f"{path}: not a KSEG1 segment file")
+    pos = len(MAGIC)
+    if pos + 2 > len(buf):
+        raise SegmentCorruption(path, pos, "truncated topic header")
+    (tlen,) = _U16.unpack_from(buf, pos)
+    pos += 2
+    if pos + tlen + 4 > len(buf):
+        raise SegmentCorruption(path, pos, "truncated topic header")
+    topic = buf[pos : pos + tlen].decode("utf-8")
+    (partition,) = _I32.unpack_from(buf, pos + tlen)
+    return topic, partition, pos + tlen + 4
+
+
 def read_header(path: str) -> tuple[str, int, int]:
-    """(topic, partition, data_offset) from a segment file; reads only
-    the first few bytes — this is what pushdown file-skipping costs."""
+    """`parse_header` of a file on disk; reads only the header bytes —
+    this is what pushdown file-skipping costs."""
     with open(path, "rb") as f:
-        magic = f.read(len(MAGIC))
-        if magic != MAGIC:
-            raise ValueError(f"{path}: not a KSEG1 segment file")
-        (tlen,) = _U16.unpack(f.read(2))
-        topic = f.read(tlen).decode("utf-8")
-        (partition,) = _I32.unpack(f.read(4))
-        return topic, partition, f.tell()
+        head = f.read(len(MAGIC) + 2)
+        if len(head) == len(MAGIC) + 2 and head[: len(MAGIC)] == MAGIC:
+            head += f.read(_U16.unpack_from(head, len(MAGIC))[0] + 4)
+    return parse_header(head, path)
 
 
 # header key marking a corruption-sentinel record (iter_segment
@@ -219,8 +232,24 @@ def iter_segment(
     payload: bool = True,
     corrupt: str = "raise",
 ) -> Iterator[tuple[str, int, int, int, int, bytes | None, bytes | None, list]]:
+    """`iter_buffer` over the segment file at ``path``."""
+    with open(path, "rb") as f:
+        buf = f.read()
+    return iter_buffer(buf, path, payload=payload, corrupt=corrupt)
+
+
+def iter_buffer(
+    buf: bytes,
+    path: str,
+    *,
+    payload: bool = True,
+    corrupt: str = "raise",
+) -> Iterator[tuple[str, int, int, int, int, bytes | None, bytes | None, list]]:
     """Yield (topic, partition, offset, ts_ms, tstype, key, value,
-    headers) for every record in one segment file.
+    headers) for every record of one whole segment file held in
+    ``buf`` (``path`` only names it in errors). This is the one record
+    walker: `iter_segment`, the batch reader and the stream decoder
+    all run it.
 
     ``payload=False`` is the metadata-only projection path: record
     boundaries are found by walking the length prefixes, but key,
@@ -238,53 +267,34 @@ def iter_segment(
     - ``"record"``: emit ONE final sentinel record carrying the raw
       undecodable tail as ``value`` and a ``CORRUPT_HEADER`` header
       naming the parse failure (offset -1, tstype -1), then stop.
-      This is the pipeline route: the kafka_segment reader uses it so
-      a torn archive file flows into ``App.process_batch``'s DLQ with
+      This is the pipeline route: the segment readers use it so a
+      torn archive file flows into ``App.process_batch``'s DLQ with
       its bytes preserved for forensics, instead of killing the batch.
     """
     if corrupt not in ("raise", "record"):
         raise ValueError(f"corrupt={corrupt!r}: expected 'raise' or 'record'")
-    topic, partition, start = read_header(path)
-    with open(path, "rb") as f:
-        f.seek(start)
-        buf = f.read()
-    pos = 0
+    topic, partition, pos = parse_header(buf, path)
     end = len(buf)
     while pos < end:
         rec_start = pos
+        key = value = None
+        headers: list = []
         try:
             if pos + _REC_FIXED.size > end:
                 raise SegmentCorruption(path, pos, "truncated record head")
             offset, ts_ms, tstype = _REC_FIXED.unpack_from(buf, pos)
             pos += _REC_FIXED.size
-            if not payload:
-                pos = _skip_sized(buf, pos, end)  # key
-                pos = _skip_sized(buf, pos, end)  # value
-                if pos + 4 > end:
-                    raise SegmentCorruption(path, pos, "truncated header count")
-                (nh,) = _I32.unpack_from(buf, pos)
-                pos += 4
-                if nh < 0:
-                    raise SegmentCorruption(path, pos, f"negative header count {nh}")
-                for _ in range(nh):
-                    if pos + 2 > end:
-                        raise SegmentCorruption(path, pos, "truncated header key")
-                    (klen,) = _U16.unpack_from(buf, pos)
-                    pos += 2 + klen
-                    if pos > end:
-                        raise SegmentCorruption(path, pos, "header key overruns file")
-                    pos = _skip_sized(buf, pos, end)
-                yield topic, partition, offset, ts_ms, tstype, None, None, []
-                continue
-            key, pos = _read_sized(buf, pos, end)
-            value, pos = _read_sized(buf, pos, end)
+            if payload:
+                key, pos = _read_sized(buf, pos, end)
+                value, pos = _read_sized(buf, pos, end)
+            else:
+                pos = _skip_sized(buf, _skip_sized(buf, pos, end), end)
             if pos + 4 > end:
                 raise SegmentCorruption(path, pos, "truncated header count")
             (nh,) = _I32.unpack_from(buf, pos)
             pos += 4
             if nh < 0:
                 raise SegmentCorruption(path, pos, f"negative header count {nh}")
-            headers = []
             for _ in range(nh):
                 if pos + 2 > end:
                     raise SegmentCorruption(path, pos, "truncated header key")
@@ -292,18 +302,20 @@ def iter_segment(
                 pos += 2
                 if pos + klen > end:
                     raise SegmentCorruption(path, pos, "header key overruns file")
+                if not payload:
+                    pos = _skip_sized(buf, pos + klen, end)
+                    continue
                 try:
                     hk = buf[pos : pos + klen].decode("utf-8")
                 except UnicodeDecodeError as e:
                     raise SegmentCorruption(path, pos, f"header key not utf-8: {e}")
-                pos += klen
-                hv, pos = _read_sized(buf, pos, end)
+                hv, pos = _read_sized(buf, pos + klen, end)
                 headers.append((hk, hv))
         except SegmentCorruption as e:
+            if not e.args[0].startswith(path):
+                e = SegmentCorruption(path, e.pos, e.why)
             if corrupt == "raise":
-                if not e.args[0].startswith(path):
-                    raise SegmentCorruption(path, e.pos, e.why) from None
-                raise
+                raise e from None
             yield (
                 topic,
                 partition,
@@ -319,8 +331,8 @@ def iter_segment(
 
 
 def list_segments(directory: str) -> list[str]:
-    """Sorted .seg paths — sort order IS the streaming offset order, so
-    it must be stable across listings (lexicographic)."""
+    """Sorted .seg paths directly in ``directory`` — lexicographic, so
+    stable across listings."""
     return sorted(
         os.path.join(directory, f)
         for f in os.listdir(directory)

@@ -1,10 +1,12 @@
 """Kafka-segment archive source: format roundtrip, Python DataSource
-batch + streaming reads, topic pushdown file-skip, and the envelope
-dropping into the app pipeline."""
+batch reads, file-stream reads, topic pushdown file-skip, and the
+envelope dropping into the app pipeline."""
 
 from __future__ import annotations
 
 import json
+import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -184,6 +186,18 @@ def test_stream_read_and_incremental_restart(spark, archive, tmp_path):
         f"{archive}/c-0-002.seg", "clicks", 0, _recs("clicks", 2, 100)
     )
     assert run_once() == 14
+    # a segment appended with an mtime far older than every file seen
+    # so far (a restored archive keeps its original mtimes) is still
+    # new to the restarted stream — the file stream's 7-day maxFileAge
+    # default would drop it silently
+    import os
+    import time
+
+    old = f"{archive}/d-0-003.seg"
+    write_segment(old, "clicks", 0, _recs("clicks", 2, 200))
+    month_ago = time.time() - 30 * 86400
+    os.utime(old, (month_ago, month_ago))
+    assert run_once() == 16
     got = spark.read.parquet(out)
     assert got.count() == got.dropDuplicates(["topic", "offset"]).count()
 
@@ -209,7 +223,7 @@ def test_envelope_into_app_pipeline(spark, archive):
 def test_run_replay_from_segments(spark, archive, tmp_path):
     """Full pipeline replay straight off a segment archive via
     fmt='segments' — the broker-less Kafka consume loop end to end:
-    custom Python streaming source -> consume/serde -> fan-out ->
+    Spark's file stream + Arrow decode -> consume/serde -> fan-out ->
     DLQ -> exactly-once parquet outputs."""
     app = App("seg-replay")
 
@@ -236,6 +250,75 @@ def test_run_replay_from_segments(spark, archive, tmp_path):
     ]
     dlq = spark.read.parquet(f"{outdir}/dlq").collect()
     assert len(dlq) == 1 and dlq[0]["offset"] == 999
+
+
+def test_stream_never_skips_listed_segments(spark, tmp_path):
+    """Kafka topics may start with '_' (``_schemas``), but Spark's file
+    listing hides names starting with '_' or '.' and descends into
+    subdirectories. SegmentWriter never writes such a name, so a
+    written '_schemas' archive replays in full; an archive the stream
+    would read differently from `list_segments` is refused at start
+    instead of losing records silently."""
+    app = App("underscore")
+
+    @app.consume(topic="_schemas", sink_topics=("schemas.out",))
+    def handle(value: FromValue[Json]) -> Message:
+        return Message(value=json.dumps(value).encode())
+
+    src = tmp_path / "src"
+    src.mkdir()
+    write_segment(str(src / "s.seg"), "_schemas", 0, _recs("_schemas", 4))
+    arch = str(tmp_path / "arch")
+    (
+        read_segments(spark, str(src))
+        .write.format("kafka_segment")
+        .option("path", arch)
+        .mode("append")
+        .save()
+    )
+    outdir = str(tmp_path / "replayed")
+    app.run_replay(spark, arch, outdir, str(tmp_path / "ckpt"), fmt="segments")
+    assert spark.read.parquet(f"{outdir}/out").count() == 4
+
+    for i, name in enumerate(("_schemas-0.seg", ".h-0.seg", "sub/b.seg")):
+        bad = tmp_path / f"bad{i}"
+        os.makedirs(os.path.dirname(bad / name))
+        write_segment(str(bad / name), "_schemas", 0, _recs("_schemas", 1))
+        assert len(read_segments(spark, str(bad)).collect()) == ("/" not in name)
+        with pytest.raises(ValueError, match=re.escape(name)):
+            stream_segments(spark, str(bad))
+
+
+def test_replay_scans_each_file_once_per_batch(spark, archive, tmp_path):
+    """A segment replay persists the micro-batch envelope, so the two
+    topic branches, the corruption filter and the out/DLQ writes all
+    read it instead of re-running the file scan and decode: the
+    binaryFile scan outputs exactly one row per archive file (without
+    the persist it reads each file once per branch and action)."""
+    app = App("scan-once")
+
+    @app.consume(topic="clicks", sink_topics=("clicks.out",))
+    def clicks(value: FromValue[Json]) -> Message:
+        return Message(value=json.dumps({"i": value["i"]}).encode())
+
+    @app.consume(topic="views", sink_topics=("views.out", "views.copy"))
+    def views(value: FromValue[Json]) -> Message:
+        return Message(value=json.dumps({"i": value["i"]}).encode())
+
+    outdir = str(tmp_path / "replayed")
+    query = app.run_replay(
+        spark, archive, outdir, str(tmp_path / "ckpt"), fmt="segments"
+    )
+    assert spark.read.parquet(f"{outdir}/out").count() == 8 + 2 * 4
+    # the micro-batch's own plan: its scan node's SQL metric counts
+    # every row (= file) the scan produced, over all re-executions
+    plan = query._jsq.streamingQuery().lastExecution().executedPlan()
+    leaves = plan.collectLeaves()
+    leaves = [leaves.apply(i) for i in range(leaves.size())]
+    scans = [n for n in leaves if n.nodeName().startswith("Scan binaryFile")]
+    assert len(scans) == 1
+    rows = scans[0].metrics().apply("numOutputRows").value()
+    assert rows == len(list_segments(archive))
 
 
 def test_segment_write_roundtrip(spark, archive, tmp_path):
@@ -394,6 +477,17 @@ def test_corrupt_tail_routes_to_dlq(spark, tmp_path):
     assert "truncated" in bad[0]["error"] or "overruns" in bad[0]["error"]
     assert bad[0]["offset"] == -1
     assert bad[0]["value"] is not None  # raw tail kept for forensics
+
+    # the same torn tail reaches the DLQ through the streaming replay
+    outdir = str(tmp_path / "replayed")
+    app.run_replay(spark, d, outdir, str(tmp_path / "ckpt"), fmt="segments")
+    out = spark.read.parquet(f"{outdir}/out").collect()
+    assert sorted(json.loads(bytes(r["value"]))["i2"] for r in out) == [0, 2, 4]
+    bad = spark.read.parquet(f"{outdir}/dlq").collect()
+    assert len(bad) == 1
+    assert bad[0]["error"].startswith("segment:corrupt: ")
+    assert bad[0]["offset"] == -1
+    assert raw[:-7].endswith(bytes(bad[0]["value"]))
 
 
 def test_corrupt_policy_defaults(spark, tmp_path):

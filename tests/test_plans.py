@@ -1423,7 +1423,7 @@ def test_round14_audit_plan_contracts(spark, sf_dir):
 
 def test_r14_weighted_median_bucket_parallel_contracts(spark, sf_dir):
     """r14 optimization contract for the bucket-parallel weighted
-    median (q148/q185/q188): ONE fact scan — the carry branch reads
+    median (q148/q185): ONE fact scan — the carry branch reads
     bucket totals off the window output and REUSES the (group, _bk)
     exchange (a groupBy on the raw rows instead planned its partial
     agg below a second exchange: measured 2 full scans + 2 full
@@ -1436,12 +1436,43 @@ def test_r14_weighted_median_bucket_parallel_contracts(spark, sf_dir):
         for name, scans in (
             ("q148_weighted_median_price", 1),
             ("q185_weighted_median", 1),
-            ("q188_interarrival_median", 1),
         ):
             p = explain_str(REGISTRY[name].spark(spark, sf_dir), "simple")
             assert p.count("Scan parquet") == scans, (name, p)
             assert p.count("ReusedExchange") >= 1, (name, p)
             assert "CartesianProduct" not in p, (name, p)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+
+
+def test_q188_weighted_median_grid_contract(spark, sf_dir):
+    """q188 runs weighted_median(grid=True): the (event_type, gap)
+    cells are rolled up first and the cumulative-weight window runs
+    over that CONTRACTED grid, not over the raw gap rows. ONE events
+    scan, no carry diamond (so no ReusedExchange), no
+    CartesianProduct."""
+    import re
+
+    from kaflow_spark.plans.explain import explain_str
+
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        p = explain_str(
+            REGISTRY["q188_interarrival_median"].spark(spark, sf_dir), "simple"
+        )
+        assert p.count("Scan parquet") == 1, p
+        assert "ReusedExchange" not in p, p
+        assert "CartesianProduct" not in p, p
+        lines = p.splitlines()
+        cum = next(i for i, ln in enumerate(lines) if "Window [sum(_w" in ln)
+        grid = next(
+            i
+            for i, ln in enumerate(lines)
+            if re.search(r"HashAggregate\(keys=\[event_type#\d+, gap#", ln)
+        )
+        # the window sits above the grid rollup with no scan between
+        assert cum < grid, p
+        assert not any("Scan" in ln for ln in lines[cum:grid]), p
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", "true")
 

@@ -8,6 +8,7 @@ from __future__ import annotations
 import datetime as dt
 import json
 
+import pytest
 from pydantic import BaseModel
 
 from kaflow_spark.app import App, Message
@@ -95,3 +96,60 @@ def test_replay_runs_handlers_once_per_record(spark, tmp_path):
     assert sorted(map(int, calls)) == list(range(8)), (
         f"expected one handler call per record, got {len(calls)}"
     )
+
+
+@pytest.mark.parametrize(
+    "dlq_topic, sinks, reuse",
+    [
+        ("clicks.dlq", ("clicks.out",), True),
+        (None, ("clicks.out", "clicks.copy"), True),
+        (None, ("clicks.out",), False),
+    ],
+)
+def test_process_stream_runs_handlers_once_per_record(
+    spark, tmp_path, dlq_topic, sinks, reuse
+):
+    """run_stream's foreachBatch body is run_replay's: when the Kafka
+    sink reads the batch more than once (a DLQ topic, or a fan-out to
+    several sinks) the batch is cached, so each user handler still
+    runs once per record; a single-sink batch without a DLQ is read
+    once and never cached."""
+    import os
+
+    calls_dir = str(tmp_path / "calls")
+    os.makedirs(calls_dir)
+    app = App(name="live-app", dlq_topic=dlq_topic)
+
+    @app.consume(topic="clicks", sink_topics=sinks)
+    def handle(v: FromValue[Json[Click]]) -> Message:
+        with open(f"{calls_dir}/log", "a") as f:
+            f.write(f"{v.user_id}\n")
+        return Message(value=b"{}")
+
+    written: dict[str, object] = {}
+
+    def write_outputs(out, dlq) -> None:
+        # the Kafka sink's actions: outputs, then dead letters only
+        # when a DLQ topic is set
+        written["cached"] = batch.is_cached
+        written["out"] = out.count()
+        if dlq_topic is not None:
+            written["dlq"] = dlq.count()
+
+    app._write_outputs = write_outputs
+    rows = [
+        _envelope("clicks", json.dumps({"user_id": i, "url": "x"}).encode(), i)
+        for i in range(8)
+    ] + [_envelope("clicks", b"{broken", 99)]
+    batch = spark.createDataFrame(rows, ENVELOPE_DDL)
+    app.process_stream(batch)(batch, 0)
+    with open(f"{calls_dir}/log") as f:
+        calls = f.read().splitlines()
+    assert sorted(map(int, calls)) == list(range(8)), (
+        f"expected one handler call per record, got {len(calls)}"
+    )
+    expected = {"cached": reuse, "out": 8 * len(sinks)}
+    if dlq_topic is not None:
+        expected["dlq"] = 1
+    assert written == expected
+    assert not batch.is_cached  # the body unpersists what it cached

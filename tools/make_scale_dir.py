@@ -23,21 +23,19 @@ Two non-obvious choices, both load-bearing:
 - document TEXT is per-replica perturbed (replica 0 stays verbatim):
   a verbatim copy would make every doc an exact clone of its 9
   siblings and near-dup candidate volume would grow QUADRATICALLY in
-  replicas — a different workload, not 10x this one. Two schemes:
-
-  * ``--doc-scheme translate`` (default): per-replica Caesar rotation
-    of the letters (``translate(text, a..zA..Z, rotated_i)``) — a
-    length-preserving BIJECTION, so within-replica equality structure
-    is preserved at EVERY grain (char n-grams, 40-char windows, words)
-    while cross-replica grams/words can never collide (equality would
-    require the identity rotation). Measured necessity: the first
-    r15 scale A/B used word tags and q140's CHAR-5-gram screen saw
-    2.96M cross-replica borderline candidates at 10x (est_jaccard
-    0.35-0.5 near-miss cloud — an artifact, not a workload);
-    rotation kills it. n_chars stays valid (length unchanged).
-  * ``--doc-scheme tag``: every \\S+ word gets a '~<i>' suffix —
-    preserves word-grain structure only; kept for reproducing the
-    first A/B artifacts.
+  replicas — a different workload, not 10x this one. Replica i
+  rotates the 52-letter alphabet by i (``translate(text, a..zA..Z,
+  rotated_i)``) — a length-preserving BIJECTION, so within-replica
+  equality structure is preserved at EVERY grain (char n-grams,
+  40-char windows, words) while cross-replica grams/words holding a
+  letter can never collide (two rotations map every letter
+  differently); hence ``--times`` is at most 52. n_chars stays valid
+  (length unchanged). Measured necessity: an earlier scale A/B
+  suffixed every word with a per-replica '~<i>' tag instead, which
+  keeps only word-grain structure, and q140's CHAR-5-gram screen saw
+  2.96M cross-replica borderline candidates at 10x (est_jaccard
+  0.35-0.5 near-miss cloud — an artifact, not a workload); rotation
+  kills it.
 """
 
 from __future__ import annotations
@@ -45,6 +43,7 @@ from __future__ import annotations
 import argparse
 import os
 import shutil
+import string
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -78,6 +77,9 @@ SHIFTS: dict[str, dict[str, int]] = {
 COPY_ONLY = ("nation", "region")
 
 
+LETTERS = string.ascii_lowercase + string.ascii_uppercase
+
+
 def replicate(df: DataFrame, table: str, times: int) -> DataFrame:
     parts = []
     for i in range(times):
@@ -85,10 +87,10 @@ def replicate(df: DataFrame, table: str, times: int) -> DataFrame:
         for c, stride in SHIFTS[table].items():
             p = p.withColumn(c, (F.col(c) + F.lit(i * stride)).cast("bigint"))
         if table == "documents" and i > 0:
-            # per-replica word tag: linear (not quadratic-clone) growth
+            # length-preserving: n_chars stays valid
             p = p.withColumn(
-                "text", F.regexp_replace(F.col("text"), r"(\S+)", rf"$1~{i}")
-            ).withColumn("n_chars", F.length("text").cast("bigint"))
+                "text", F.translate("text", LETTERS, LETTERS[i:] + LETTERS[:i])
+            )
         parts.append(p)
     out = parts[0]
     for p in parts[1:]:
@@ -102,6 +104,8 @@ def main() -> int:
     ap.add_argument("--out", default="/root/scale10")
     ap.add_argument("--times", type=int, default=10)
     args = ap.parse_args()
+    if args.times > len(LETTERS):
+        ap.error(f"--times: at most {len(LETTERS)} replicas, one letter rotation each")
 
     spark = get_spark("make_scale_dir")
     spark.sparkContext.setLogLevel("ERROR")
