@@ -519,7 +519,6 @@ def minhash_lsh_candidates(
     side_a=None,
     side_b=None,
     bucket_salt: int | str = "auto",
-    broadcast_b: bool = False,
 ) -> DataFrame:
     """Near-duplicate candidate pairs via banded MinHash LSH.
 
@@ -550,7 +549,9 @@ def minhash_lsh_candidates(
     b-side) without the within-set ``id_a < id_b`` dedup, and —
     the point — within-set bucket collisions never materialize, so
     the join output scales with |A|x|B| bucket overlap instead of
-    the corpus's own collision volume.
+    the corpus's own collision volume. The ``max_bucket`` cap counts
+    each bucket over the whole frame before the side split, so an
+    over-cap bucket is dropped from both sides.
 
     ``bucket_salt > 1`` routes the within-corpus bucket self-join
     through :func:`operators.skew.salted_self_pairs` (triangle-salted
@@ -563,19 +564,6 @@ def minhash_lsh_candidates(
     salting is the working fallback. Identical output by
     construction; ~``salt``x replication of the 24-byte band rows is
     the price.
-
-    ``broadcast_b=True`` (cross screens only) attests that the
-    ``side_b`` id set is the SMALL side — a benchmark suite, not a
-    second corpus — and rebuilds the candidate stage so the corpus
-    side never exchanges (r15, guide §2.4/§3.1): the bucket cap
-    becomes a broadcast anti-join against the tiny over-cap bucket
-    set instead of a corpus-wide count window, the bucket join
-    broadcasts the b-side band rows, and signature re-attach
-    broadcasts (pairs x b-side signatures) into the corpus signature
-    frame. Output identical; the only sizing assumption is that the
-    surviving pair set stays at screen-output scale (a calibrated
-    banding guarantees this — drop the flag for corpus-x-corpus
-    volumes).
     """
     # validate the pairing BEFORE the S x H signature kernel runs:
     # failing after sig.count() would bill the full MinHash cost (and
@@ -622,29 +610,9 @@ def minhash_lsh_candidates(
     ).select("_id", "bb.band", "bb.bucket")
     cross = side_a is not None
     # bound pathological buckets before the self-join
-    if cross and broadcast_b:
-        # r15 (guide §2.4 — remove shuffles outright): on the
-        # broadcast cross path the corpus band rows must never
-        # exchange, so the cap cannot be a window (whose partitioning
-        # shuffles every (id, band, bucket) row and sorts it). The
-        # over-cap bucket set is TINY by construction (a bucket only
-        # exceeds max_bucket when degenerate), so derive it as a
-        # partial-agg'd (band, bucket) rollup — 16-byte rows into its
-        # exchange — and drop its members with a broadcast LEFT ANTI.
-        # Semantics identical to the window filter: same counts over
-        # the same pre-side-split frame, rows in over-cap buckets
-        # dropped from BOTH sides.
-        hot = (
-            banded.groupBy("band", "bucket")
-            .agg(F.count(F.lit(1)).alias("_bn"))
-            .filter(F.col("_bn") > max_bucket)
-            .select("band", "bucket")
-        )
-        counted = banded.join(F.broadcast(hot), ["band", "bucket"], "left_anti")
-    else:
-        counted = banded.withColumn(
-            "_bn", F.count(F.lit(1)).over(Window.partitionBy("band", "bucket"))
-        ).filter(F.col("_bn") <= max_bucket)
+    counted = banded.withColumn(
+        "_bn", F.count(F.lit(1)).over(Window.partitionBy("band", "bucket"))
+    ).filter(F.col("_bn") <= max_bucket)
     if bucket_salt == "auto":
         # default max_bucket (1000) algebraically bounds any bucket's
         # pair work under the task budget, so the common case resolves
@@ -682,13 +650,6 @@ def minhash_lsh_candidates(
             left = left.filter(side_a(F.col("id_a")))
         if side_b is not None:
             right = right.filter(side_b(F.col("id_b")))
-        if cross and broadcast_b:
-            # the caller attests side_b is the SMALL screen set (a
-            # benchmark suite): broadcasting its band rows makes the
-            # bucket join a BroadcastHashJoin — the corpus side
-            # streams map-side, zero corpus exchanges before the pair
-            # aggregate (guide §3.1)
-            right = F.broadcast(right)
         joined = left.join(right, ["band", "bucket"])
         if not cross:
             joined = joined.filter(F.col("id_a") < F.col("id_b"))
@@ -702,15 +663,7 @@ def minhash_lsh_candidates(
     # re-attach signatures to the (much smaller) surviving pair set
     sig_a = sig.select(F.col("_id").alias("id_a"), F.col("_sig").alias("sig_a"))
     sig_b = sig.select(F.col("_id").alias("id_b"), F.col("_sig").alias("sig_b"))
-    if cross and broadcast_b:
-        # id_b values are side_b members by construction; restricting
-        # the signature side first keeps the broadcast at screen-set
-        # size, and broadcasting the bounded pair set into the sig_a
-        # join keeps the corpus signature frame un-shuffled too
-        sig_b = F.broadcast(sig_b.filter(side_b(F.col("id_b"))))
-        paired = F.broadcast(pairs.join(sig_b, "id_b")).join(sig_a, "id_a")
-    else:
-        paired = pairs.join(sig_a, "id_a").join(sig_b, "id_b")
+    paired = pairs.join(sig_a, "id_a").join(sig_b, "id_b")
     # estimated jaccard = fraction of agreeing signature positions
     agree = F.aggregate(
         F.zip_with(F.col("sig_a"), F.col("sig_b"), lambda x, y: (x == y).cast("int")),

@@ -310,7 +310,6 @@ def bfs_hops(
     sources: list[int],
     *,
     max_hops: int = 4,
-    bounded_nodes: bool = False,
 ) -> DataFrame:
     """Multi-source breadth-first hop distance: ``(node, hop)`` for
     every node reachable from ``sources`` within ``max_hops`` directed
@@ -319,31 +318,21 @@ def bfs_hops(
     Distributed frontier expansion, the textbook Pregel shape
     re-expressed declaratively: each round joins the current frontier
     to the edge list (one equi-join shuffle on the edge source), then
-    a min-aggregate + LEFT ANTI against the visited set keeps only
-    newly discovered nodes. Rounds are ``max_hops`` — a FIXED,
+    a distinct + LEFT ANTI against the visited set keeps only newly
+    discovered nodes. Rounds are ``max_hops`` — a FIXED,
     caller-declared bound, so the loop builds one lazy plan of
     ``max_hops`` join stages with NO driver-side action inside (unlike
     the convergence-detected CC iteration above, which must count per
     round); the unioned result materializes once. At 100 TB each
     round's shuffle is (node, hop) rows — never paths — and frontier
-    size is bounded by |V|.
-
-    ``bounded_nodes=True`` declares that the NODE ID SPACE is small (a
-    dimension key — q161's graph is nation->nation, |V| <= 25): the
-    distinct edge list is persisted once (every round reuses the tiny
-    materialized table instead of re-deriving it through the upstream
-    joins) and the frontier / visited sets ride BROADCAST hash joins,
-    so no round shuffles the edge side at all (guide §3.1; r14 verdict
-    item 4 — the r15 A/B numbers live in OPTIMIZATION_r15.md). Leave
-    it False when nodes are unbounded (user/doc ids): broadcasting a
-    frontier bounded only by |V| is exactly the §3.1 driver-OOM trap.
+    size is bounded by |V|. Nothing is persisted: the result is a
+    plain lazy plan, so there is no cache entry for the caller to
+    release.
     """
     e = edges.select(
         F.col(src_col).cast("bigint").alias("_src"),
         F.col(dst_col).cast("bigint").alias("_dst"),
     )
-    if bounded_nodes:
-        e = e.persist()
     visited = None
     frontier = None
     for s in sorted(set(sources)):
@@ -354,15 +343,11 @@ def bfs_hops(
         frontier = row if frontier is None else frontier.unionAll(row)
     visited = frontier
     for hop in range(1, max_hops + 1):
-        fr = F.broadcast(frontier) if bounded_nodes else frontier
-        vis = visited.select("node")
-        if bounded_nodes:
-            vis = F.broadcast(vis)
         nxt = (
-            fr.join(e, fr["node"] == e["_src"])
+            frontier.join(e, frontier["node"] == e["_src"])
             .select(F.col("_dst").alias("node"))
             .distinct()
-            .join(vis, "node", "left_anti")
+            .join(visited.select("node"), "node", "left_anti")
             .select("node", F.lit(hop).cast("bigint").alias("hop"))
         )
         visited = visited.unionAll(nxt)

@@ -442,14 +442,9 @@ def q161(spark: SparkSession, sf: str) -> DataFrame:
         )
         .distinct()
     )
-    # r15: the node space is the NATION key (|V| <= 25 by schema), so
-    # the distinct edge table is bounded (<= 625 rows) — persist it
-    # once and broadcast the frontier/visited sets each round instead
-    # of re-deriving the 4-table edge join per round behind AQE stage
-    # reuse (verdict item 4; A/B in OPTIMIZATION_r15.md).
-    return bfs_hops(
-        edges, "src", "dst", [0], max_hops=4, bounded_nodes=True
-    ).orderBy("hop", "node")
+    return bfs_hops(edges, "src", "dst", [0], max_hops=4).orderBy(
+        "hop", "node"
+    )
 
 
 @declare(

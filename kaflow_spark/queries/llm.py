@@ -1323,11 +1323,6 @@ def q140(spark: SparkSession, sf: str) -> DataFrame:
             shingles=sh,
             side_a=lambda c: c % 20 != 0,  # corpus side
             side_b=lambda c: c % 20 == 0,  # benchmark side
-            # r15: the benchmark side is 1/20th of the corpus by
-            # construction — broadcast its band rows / signatures so
-            # the corpus-side candidate chain has no exchange before
-            # the pair aggregate (verdict item 2; guide §3.1)
-            broadcast_b=True,
         )
         .filter(F.col("est_jaccard") >= 0.35)
         .select("id_a", "id_b")

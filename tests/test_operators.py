@@ -727,28 +727,6 @@ def test_minhash_side_restricted_cross_set(spark):
     assert (3, 20) in got  # the planted near-copy of doc 3
     assert not any(b == 40 for _, b in got)  # unrelated bench item quiet
 
-    # r15 broadcast_b path (anti-join bucket cap + broadcast b-side
-    # band rows / signatures): candidate set AND est_jaccard identical
-    bc = minhash_lsh_candidates(
-        df,
-        "doc_id",
-        "text",
-        bands=32,
-        min_bands=2,
-        side_a=lambda c: c % 20 != 0,
-        side_b=lambda c: c % 20 == 0,
-        broadcast_b=True,
-    )
-    plain_full = {
-        (r["id_a"], r["id_b"], round(r["est_jaccard"], 9))
-        for r in cand.collect()
-    }
-    bc_full = {
-        (r["id_a"], r["id_b"], round(r["est_jaccard"], 9))
-        for r in bc.collect()
-    }
-    assert bc_full == plain_full
-
 
 def test_hamming_pairs_pigeonhole_recall(spark):
     """All <=1-substitution pairs found; a 2-substitution pair is not;

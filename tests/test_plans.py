@@ -633,6 +633,16 @@ def test_q161_bfs_rounds_stay_equi_join(spark, sf_dir):
     assert "LeftAnti" in txt
 
 
+def test_q161_leaves_no_cache_entry(spark, sf_dir):
+    """q161 runs to a sink without persisting anything: a query that
+    caches a frame and never releases it holds executor memory for the
+    rest of the session."""
+    spark.catalog.clearCache()
+    df = REGISTRY["q161_bfs_hops"].spark(spark, sf_dir)
+    df.write.format("noop").mode("overwrite").save()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_q162_per_doc_count_partition(spark, sf_dir):
     """Intra-doc repetition: the occurrence-count window must
     partition by (_id, hash) — per-doc-bounded — not by hash alone

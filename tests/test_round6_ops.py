@@ -78,17 +78,12 @@ def test_bfs_hops_shortest_paths(spark):
         [(0, 1), (1, 2), (2, 3), (3, 4), (4, 5), (0, 3), (5, 0), (9, 10)],
         ["src", "dst"],
     )
-    # both execution shapes (r15: bounded_nodes persists the edge list
-    # and broadcasts frontier/visited) must agree on the hop map
-    for bounded in (False, True):
-        got = {
-            r.node: r.hop
-            for r in bfs_hops(
-                edges, "src", "dst", [0], max_hops=4, bounded_nodes=bounded
-            ).collect()
-        }
-        # 3 via the shortcut at hop 1, NOT hop 3; island unreachable
-        assert got == {0: 0, 1: 1, 3: 1, 2: 2, 4: 2, 5: 3}, bounded
+    got = {
+        r.node: r.hop
+        for r in bfs_hops(edges, "src", "dst", [0], max_hops=4).collect()
+    }
+    # 3 via the shortcut at hop 1, NOT hop 3; island unreachable
+    assert got == {0: 0, 1: 1, 3: 1, 2: 2, 4: 2, 5: 3}
 
 
 def test_bfs_hops_multi_source(spark):
