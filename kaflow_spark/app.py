@@ -6,9 +6,12 @@ Re-expresses the reference's consume→transform→produce model
 - ``@app.consume(topic, sink_topics=...)`` registers a **record
   handler** with the reference's injected-parameter signature
   (FromValue/FromKey/FromHeader/MessageOffset/...). The engine
-  compiles it to ONE Arrow-batched ``mapInPandas`` stage per topic:
-  raw bytes cross into Python once, decode + handle + encode happen
-  in-process, outputs fan out to every sink topic.
+  compiles every record and batch handler into ONE Arrow-batched
+  ``mapInPandas`` stage that splits each batch by topic: raw bytes
+  cross into Python once per envelope partition, decode + handle +
+  encode happen in-process, and outputs fan out to every sink topic
+  by an ``explode`` over the topic's sinks, so the handlers run once
+  whatever the number of topics and sinks.
 - ``@app.transform(topic, sink_topics=..., value=...)`` registers a
   **declarative handler**: a function DataFrame→DataFrame over the
   JVM-decoded value struct (``from_json`` fast path) — zero Python
@@ -24,13 +27,15 @@ Re-expresses the reference's consume→transform→produce model
   kaflow/applications.py:262-276).
 
 Batch and streaming run the same compiled graph: ``process_batch`` for
-a static envelope DataFrame (this is what TestClient drives), and
-``run_stream``/``process_stream`` for Structured Streaming micro-batches.
+a static envelope DataFrame, and ``_run_micro_batch`` for one micro-batch
+of ``run_stream``/``run_replay`` (which write the outputs and the dead
+letters as two concurrent jobs) and for each TestClient publish.
 """
 
 from __future__ import annotations
 
 import asyncio
+import functools
 from collections.abc import Callable, Iterator, Sequence
 from dataclasses import dataclass, field
 from typing import Any
@@ -51,11 +56,6 @@ _STAGE_DDL = (
     "out_headers array<struct<key: string, value: binary>>, "
     "topic string, partition int, offset bigint, timestamp timestamp, "
     "raw_value binary, raw_key binary"
-)
-
-_DLQ_DDL = (
-    "topic string, partition int, offset bigint, timestamp timestamp, "
-    "value binary, key binary, error string"
 )
 
 
@@ -598,6 +598,29 @@ class App:
 
     # --------------------------------------------------------- execution
 
+    def _compile_python_stage(
+        self, regs: Sequence[_Consumer | _BatchConsumer]
+    ) -> Callable:
+        """ONE mapInPandas stage fn for every record and batch handler:
+        each Arrow batch is split by topic and each part goes through
+        that topic's compiled stage, so one Python pass per envelope
+        partition serves every topic."""
+        stages = {
+            reg.topic: (
+                self._compile_batch_consumer(reg)
+                if isinstance(reg, _BatchConsumer)
+                else self._compile_consumer(reg)
+            )
+            for reg in regs
+        }
+
+        def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            for pdf in batches:
+                for topic, part in pdf.groupby("topic", sort=False):
+                    yield from stages[topic](iter([part]))
+
+        return stage
+
     def process_batch(
         self,
         envelope: DataFrame,
@@ -608,15 +631,18 @@ class App:
         outputs has one row per (record result × sink topic) in
         OUTPUT_DDL shape; dlq carries failed records with raw bytes.
 
+        The graph has one branch per source of results: the single
+        Python stage holding every record/batch handler, plus one per
+        transform topic; sinks fan out inside a branch by ``explode``.
+
         ``_cache_into``: internal hook for callers that will run BOTH
         returned frames as separate actions (e.g. run_replay writes
-        outputs and dlq independently) — each per-topic staged frame
-        is persisted and appended, so the user-handler stage executes
-        once instead of once per action; the caller unpersists them
-        after its writes.
+        outputs and dlq independently) — the staged Python frame is
+        persisted and appended, so each user handler executes once
+        instead of once per action; the caller unpersists it after its
+        writes.
         """
-        spark = envelope.sparkSession
-        outputs: list[DataFrame] = []
+        outputs: list[DataFrame | None] = []
         dlqs: list[DataFrame] = []
         # corruption sentinels from the segment reader (torn tail
         # records surfaced as rows with CORRUPT_HEADER) go straight to
@@ -624,81 +650,68 @@ class App:
         # not frame; the raw tail rides in `value` for forensics
         from kaflow_spark.sources.segments import CORRUPT_HEADER
 
-        is_corrupt = F.coalesce(
-            F.exists(
-                F.col("headers"), lambda h: h["key"] == F.lit(CORRUPT_HEADER)
-            ),
-            F.lit(False),
+        # the graph is rebuilt on the driver for every micro-batch and
+        # each Column call costs about a dozen py4j round trips, so the
+        # fixed expressions are SQL strings, parsed in one call each
+        is_corrupt = (
+            f"coalesce(exists(headers, h -> h.key = '{CORRUPT_HEADER}'), false)"
         )
-        corrupt_src = envelope.filter(is_corrupt)
         dlqs.append(
-            corrupt_src.select(
+            envelope.filter(is_corrupt).selectExpr(
                 "topic",
                 "partition",
                 "offset",
                 "timestamp",
                 "value",
                 "key",
-                F.concat(
-                    F.lit("segment:corrupt: "),
-                    F.try_element_at(
-                        F.filter(
-                            F.col("headers"),
-                            lambda h: h["key"] == F.lit(CORRUPT_HEADER),
-                        ),
-                        F.lit(1),
-                    )["value"].cast("string"),
-                ).alias("error"),
+                "concat('segment:corrupt: ', cast(try_element_at(filter("
+                f"headers, h -> h.key = '{CORRUPT_HEADER}'), 1).value AS string))"
+                " AS error",
             )
         )
-        envelope = envelope.filter(~is_corrupt)
-        for topic, reg in self._consumers.items():
-            src = envelope.filter(F.col("topic") == topic)
-            if isinstance(reg, _Transform):
-                ok, dlq = self._run_transform(reg, src)
-            else:
-                compiler = (
-                    self._compile_batch_consumer
-                    if isinstance(reg, _BatchConsumer)
-                    else self._compile_consumer
-                )
-                staged = src.mapInPandas(compiler(reg), _STAGE_DDL)
-                if _cache_into is not None:
-                    staged = staged.persist()
-                    _cache_into.append(staged)
-                ok = staged.filter(F.col("error").isNull())
-                dlq = staged.filter(F.col("error").isNotNull()).select(
+        envelope = envelope.filter(f"NOT {is_corrupt}")
+        python = [
+            r for r in self._consumers.values() if not isinstance(r, _Transform)
+        ]
+        if python:
+            staged = envelope.filter(
+                F.col("topic").isin([r.topic for r in python])
+            ).mapInPandas(self._compile_python_stage(python), _STAGE_DDL)
+            if _cache_into is not None:
+                staged = staged.persist()
+                _cache_into.append(staged)
+            dlqs.append(
+                staged.filter("error IS NOT NULL").selectExpr(
                     "topic",
                     "partition",
                     "offset",
                     "timestamp",
-                    F.col("raw_value").alias("value"),
-                    F.col("raw_key").alias("key"),
+                    "raw_value AS value",
+                    "raw_key AS key",
                     "error",
                 )
-                ok = ok.select(
-                    F.col("out_value").alias("value"),
-                    F.col("out_key").alias("key"),
-                    F.col("out_headers").alias("headers"),
+            )
+            ok = staged.filter("error IS NULL").selectExpr(
+                "topic",
+                "out_value AS value",
+                "out_key AS key",
+                "out_headers AS headers",
+            )
+            outputs.append(_fan_out(ok, python))
+        for topic, reg in self._consumers.items():
+            if isinstance(reg, _Transform):
+                ok, dlq = self._run_transform(
+                    reg, envelope.filter(F.col("topic") == topic)
                 )
-            # fan-out: one output row per sink topic (reference publishes
-            # the same Message to every sink, kaflow/_consumer.py:218-232)
-            for sink in reg.sink_topics:
-                outputs.append(
-                    ok.select(
-                        F.lit(sink).alias("topic"), "value", "key", "headers"
-                    )
-                )
-            dlqs.append(dlq)
-        empty_out = spark.createDataFrame([], OUTPUT_DDL)
-        empty_dlq = spark.createDataFrame([], _DLQ_DDL)
-        out = outputs[0] if outputs else empty_out
-        for o in outputs[1:]:
-            out = out.unionAll(o)
-        dlq = dlqs[0] if dlqs else empty_dlq
-        for d in dlqs[1:]:
-            dlq = dlq.unionAll(d)
-        return out, dlq
+                outputs.append(_fan_out(ok, [reg]))
+                dlqs.append(dlq)
+        branches = [o for o in outputs if o is not None]
+        out = (
+            functools.reduce(DataFrame.unionAll, branches)
+            if branches
+            else envelope.sparkSession.createDataFrame([], OUTPUT_DDL)
+        )
+        return out, functools.reduce(DataFrame.unionAll, dlqs)
 
     def _run_transform(
         self, reg: _Transform, src: DataFrame
@@ -722,23 +735,19 @@ class App:
             decoded = decoded.withColumn(
                 "_key_parsed", reg.key_serde.decode_col(F.col("key"))
             )
-        dlq = decoded.filter(bad).select(
+        dlq = decoded.filter(bad).selectExpr(
             "topic",
             "partition",
             "offset",
             "timestamp",
             "value",
             "key",
-            F.lit("deserialization:value: malformed payload").alias("error"),
+            "'deserialization:value: malformed payload' AS error",
         )
         ok_in = decoded.filter(~bad)
-        typed = ok_in.select(
-            F.col("_parsed").alias("value"),
-            *(
-                [F.col("_key_parsed").alias("key")]
-                if reg.key_serde is not None
-                else [F.col("key")]
-            ),
+        typed = ok_in.selectExpr(
+            "_parsed AS value",
+            "_key_parsed AS key" if reg.key_serde is not None else "key",
             "headers",
             "partition",
             "offset",
@@ -791,10 +800,14 @@ class App:
         """foreachBatch body: run the compiled graph per micro-batch."""
 
         def body(batch_df: DataFrame, batch_id: int) -> None:
-            # the Kafka sink reads the batch once per sink topic, and
-            # once more for the DLQ topic
-            sinks = sum(len(r.sink_topics) for r in self._consumers.values())
-            reuse = self.dlq_topic is not None or sinks > 1
+            # the Kafka sink reads the batch once per branch (the one
+            # Python stage, if any handler is registered, plus one per
+            # transform; fan-out to several sinks is an explode inside
+            # a branch), and once more for the DLQ topic
+            regs = list(self._consumers.values())
+            transforms = sum(isinstance(r, _Transform) for r in regs)
+            branches = transforms + (len(regs) > transforms)
+            reuse = self.dlq_topic is not None or branches > 1
             self._run_micro_batch(batch_df, self._write_outputs, reuse)
 
         return body
@@ -805,14 +818,19 @@ class App:
         write: Callable[[DataFrame, DataFrame], None],
         reuse: bool,
     ) -> None:
-        """The per-micro-batch body of run_stream and run_replay. With
-        ``reuse`` (``write`` reads the batch more than once) the
-        envelope is persisted once, so every topic branch and the DLQ
-        read it instead of re-running the source scan and decode, and
-        the staged frames are persisted via ``_cache_into``, so each
-        user handler runs once per record; everything is unpersisted
-        once ``write`` returns or raises. Without it the batch is read
-        once and a cache would only add a materialisation."""
+        """The per-micro-batch body of run_stream, run_replay and
+        TestClient. ``write(out, dlq)`` returns only once every action
+        it starts has finished; the stream and replay writers run the
+        outputs and the dead letters as two concurrent jobs
+        (``_write_concurrently``). With ``reuse`` (the
+        batch is read more than once: by both writes, or by several
+        branches) the envelope is persisted once, so every branch and
+        the DLQ read it instead of re-running the source scan and
+        decode, and the staged Python frame is persisted via
+        ``_cache_into``, so each user handler runs once per record
+        even while both jobs read it; everything is unpersisted once
+        ``write`` returns or raises. Without it the batch is read once
+        and a cache would only add a materialisation."""
         cached: list[DataFrame] | None = None
         if reuse:
             batch_df = batch_df.persist()
@@ -878,8 +896,10 @@ class App:
 
         def write(batch_df: DataFrame, batch_id: int) -> None:
             def write_both(out: DataFrame, dlq: DataFrame) -> None:
-                write_out(out, batch_id)
-                write_dlq(dlq, batch_id)
+                _write_concurrently(
+                    lambda: write_out(out, batch_id),
+                    lambda: write_dlq(dlq, batch_id),
+                )
 
             # outputs and dead letters are two writes of one batch
             self._run_micro_batch(batch_df, write_both, reuse=True)
@@ -899,12 +919,8 @@ class App:
     def _write_outputs(self, out: DataFrame, dlq: DataFrame) -> None:
         if not self.brokers:
             raise ValueError("App(brokers=...) required for Kafka sinks")
-        (
-            out.write.format("kafka")
-            .option("kafka.bootstrap.servers", self.brokers)
-            .save()
-        )
-        if self.dlq_topic is not None:
+
+        def write_dlq() -> None:
             (
                 self._dlq_records(dlq)
                 .write.format("kafka")
@@ -912,6 +928,15 @@ class App:
                 .option("includeHeaders", "true")
                 .save()
             )
+
+        _write_concurrently(
+            lambda: (
+                out.write.format("kafka")
+                .option("kafka.bootstrap.servers", self.brokers)
+                .save()
+            ),
+            write_dlq if self.dlq_topic is not None else None,
+        )
 
     def _dlq_records(self, dlq: DataFrame) -> DataFrame:
         """Shape failed records for the DLQ topic. Failure metadata
@@ -1046,6 +1071,67 @@ class App:
             )
             query.awaitTermination()
         return query
+
+
+def _write_concurrently(
+    write_out: Callable[[], None], write_dlq: Callable[[], None] | None
+) -> None:
+    """Run ``write_out`` on the caller's thread while ``write_dlq``
+    runs on a ``pyspark.InheritableThread``, so the outputs job and the
+    dead-letter job of one micro-batch overlap. The thread inherits the
+    caller's local properties, which keeps the DLQ job in the streaming
+    query's job group (a plain thread drops ``spark.jobGroup.id``).
+    Returns only after both writes end — the caller then unpersists
+    what they read, and a commit marker must follow both — and
+    re-raises the first error, the outputs write's before the DLQ's."""
+    if write_dlq is None:
+        write_out()
+        return
+    from pyspark import InheritableThread
+
+    errors: list[BaseException] = []
+
+    def side() -> None:
+        try:
+            write_dlq()
+        except BaseException as exc:  # noqa: BLE001 — re-raised below
+            errors.append(exc)
+
+    thread = InheritableThread(target=side)
+    thread.start()
+    try:
+        write_out()
+    finally:
+        thread.join()
+    if errors:
+        raise errors[0]
+
+
+def _fan_out(
+    ok: DataFrame, regs: Sequence[_Consumer | _BatchConsumer | _Transform]
+) -> DataFrame | None:
+    """One output row per (result × sink topic) of ``ok`` (columns
+    topic/value/key/headers, topic = the source topic, which a single
+    registration may omit); the reference publishes the same Message
+    to every sink, kaflow/_consumer.py:218-232. The sinks are exploded
+    from the topic's sink list, so a topic with several sinks is still
+    ONE branch and its upstream runs once. None when no topic in
+    ``regs`` has a sink."""
+    sinks = [r for r in regs if r.sink_topics]
+    if not sinks:
+        return None
+    if len(regs) == 1:
+        fan = F.array(*map(F.lit, sinks[0].sink_topics))
+    else:
+        by_topic = F.create_map(
+            *(
+                c
+                for r in sinks
+                for c in (F.lit(r.topic), F.array(*map(F.lit, r.sink_topics)))
+            )
+        )
+        fan = F.element_at(by_topic, F.col("topic"))
+    return ok.select(F.explode(fan).alias("topic"), "value", "key", "headers")
 
 
 def _is_binary(df: DataFrame, col: str) -> bool:

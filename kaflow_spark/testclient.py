@@ -1,8 +1,9 @@
 """In-process test harness (parity: /root/reference/kaflow/testclient.py:25-64).
 
 ``TestClient.publish`` fabricates one envelope record, runs the app's
-compiled batch graph on it, and returns the handler's produced
-``Message`` (or None when the record was filtered / dead-lettered) —
+compiled graph on it as one micro-batch (each handler runs once), and
+returns the handler's produced ``Message`` (or None when the record
+was filtered / dead-lettered) —
 sinks are intercepted: nothing leaves the process. ``last_dlq`` holds
 the dead-letter rows of the most recent publish for assertions.
 """
@@ -12,7 +13,7 @@ from __future__ import annotations
 import datetime as _dt
 from typing import Any
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from kaflow_spark.app import App, _headers_to_rows
 from kaflow_spark.message import ENVELOPE_DDL, Message
@@ -57,9 +58,14 @@ class TestClient:
             _headers_to_rows(headers),
         )
         envelope = self.spark.createDataFrame([row], ENVELOPE_DDL)
-        out, dlq = self.app.process_batch(envelope)
-        self.last_outputs = out.collect()
-        self.last_dlq = dlq.collect()
+
+        def collect(out: DataFrame, dlq: DataFrame) -> None:
+            self.last_outputs = out.collect()
+            self.last_dlq = dlq.collect()
+
+        # two actions over one batch: the micro-batch body caches the
+        # staged frame, so the handler runs once per publish
+        self.app._run_micro_batch(envelope, collect, reuse=True)
         if not self.last_outputs:
             return None
         first = self.last_outputs[0]

@@ -110,6 +110,24 @@ def test_none_return_drops_record(app, spark):
     assert client.last_outputs == [] and client.last_dlq == []
 
 
+def test_publish_runs_handler_once(app, spark, tmp_path):
+    """One publish is one handler call, as in the reference: the
+    outputs and the dead letters are read from one cached batch, not
+    by re-running the handler once per collected frame."""
+    log = tmp_path / "calls"
+
+    @app.consume(topic="t", sink_topics=("out",))
+    def handler(v: FromValue[Str]) -> Message:
+        with open(log, "a") as f:
+            f.write(v + "\n")
+        return Message(value=v.encode())
+
+    client = make_client(app, spark)
+    assert client.publish("t", b"x").value == b"x"
+    assert log.read_text().splitlines() == ["x"]
+    assert client.last_dlq == []
+
+
 def test_malformed_value_dead_letters(app, spark):
     @app.consume(topic="t", sink_topics=("out",))
     def handler(v: FromValue[Json[UserClick]]) -> Message:

@@ -12,17 +12,28 @@ Trap 3 — foreachBatch-style bodies that run two actions over one
 staged frame execute the user handler twice unless the staged frame
 is persisted (``process_batch(_cache_into=...)``). The guard counts
 actual handler executions with an accumulator, under both calling
-conventions, so the trap's existence AND the fix stay measured.
+conventions, so the trap's existence AND the fix stay measured. Every
+record and batch handler shares ONE staged frame, and fan-out to
+several sinks is an ``explode`` inside a branch, so sinks add no
+reads of it: a plan guard keeps one ``MapInPandas`` per frame and one
+``from_json`` per transform.
 """
 
 from __future__ import annotations
 
 import re
 
+import pandas as pd
+from pydantic import BaseModel
 from pyspark.sql import functions as F
 
 from kaflow_spark.message import ENVELOPE_DDL
-from kaflow_spark.params import FromValue, Str
+from kaflow_spark.params import FromValue, Json, Str
+
+
+class _Metric(BaseModel):
+    host: str
+    cpu: int
 
 
 def test_trap1_word_ngrams_keeps_split_out_of_lambda(spark):
@@ -90,3 +101,36 @@ def test_trap3_without_cache_the_trap_is_real(spark):
     re-execute the mapInPandas stage. If Spark ever starts
     auto-caching this (making the guard moot), this test flags it."""
     assert _two_action_handler_runs(spark, use_cache=False) == 8
+
+
+def test_trap3_one_python_stage_and_one_branch_per_transform(spark):
+    """Two Python topics share ONE mapInPandas stage, and a transform
+    fanning out to two sinks decodes its payload in ONE branch of the
+    outputs plan: a stage or a branch per topic or per sink would run
+    the handlers and the from_json decode once per branch."""
+    from kaflow_spark.app import App
+
+    app = App()
+
+    @app.consume(topic="a", sink_topics=("a.out",))
+    def on_a(v: FromValue[Str]) -> bytes:
+        return v.encode()
+
+    @app.consume_batches(topic="b", sink_topics=("b.out",))
+    def on_b(pdf: pd.DataFrame) -> pd.DataFrame:
+        return pdf[["value"]]
+
+    @app.transform(topic="m", sink_topics=("m.hot", "m.all"), value=Json[_Metric])
+    def on_m(df):
+        return df.select(F.col("value.host").cast("binary").alias("value"))
+
+    env = spark.createDataFrame([], ENVELOPE_DDL)
+    out, dlq = app.process_batch(env)
+
+    def lines(df, needle: str) -> int:
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        return sum(needle in line for line in plan.splitlines())
+
+    assert lines(out, "MapInPandas") == 1
+    assert lines(dlq, "MapInPandas") == 1
+    assert lines(out, "from_json(") == 1

@@ -99,21 +99,23 @@ def test_replay_runs_handlers_once_per_record(spark, tmp_path):
 
 
 @pytest.mark.parametrize(
-    "dlq_topic, sinks, reuse",
+    "dlq_topic, sinks, transform, reuse",
     [
-        ("clicks.dlq", ("clicks.out",), True),
-        (None, ("clicks.out", "clicks.copy"), True),
-        (None, ("clicks.out",), False),
+        ("clicks.dlq", ("clicks.out",), False, True),
+        (None, ("clicks.out", "clicks.copy"), False, False),
+        (None, ("clicks.out",), False, False),
+        (None, ("clicks.out",), True, True),
     ],
 )
 def test_process_stream_runs_handlers_once_per_record(
-    spark, tmp_path, dlq_topic, sinks, reuse
+    spark, tmp_path, dlq_topic, sinks, transform, reuse
 ):
     """run_stream's foreachBatch body is run_replay's: when the Kafka
-    sink reads the batch more than once (a DLQ topic, or a fan-out to
-    several sinks) the batch is cached, so each user handler still
-    runs once per record; a single-sink batch without a DLQ is read
-    once and never cached."""
+    sink reads the batch more than once (a DLQ topic, or a transform
+    branch next to the Python stage) the batch is cached, so each user
+    handler still runs once per record; without either the batch is
+    read once and never cached, whatever the number of sinks, because
+    fan-out is an explode inside the one branch."""
     import os
 
     calls_dir = str(tmp_path / "calls")
@@ -125,6 +127,13 @@ def test_process_stream_runs_handlers_once_per_record(
         with open(f"{calls_dir}/log", "a") as f:
             f.write(f"{v.user_id}\n")
         return Message(value=b"{}")
+
+    if transform:
+        # a second branch over the batch; no record of the batch is on
+        # its topic, so the output count is the handler's alone
+        @app.transform(topic="views", sink_topics=("views.out",), value=Json[Click])
+        def views(df):
+            return df
 
     written: dict[str, object] = {}
 
@@ -153,3 +162,36 @@ def test_process_stream_runs_handlers_once_per_record(
         expected["dlq"] = 1
     assert written == expected
     assert not batch.is_cached  # the body unpersists what it cached
+
+
+def test_write_concurrently_keeps_job_group_and_raises(spark):
+    """The dead-letter write runs on its own thread, in the caller's
+    job group (a streaming query's jobs carry its run id there), and
+    its failure surfaces only after the outputs write has finished."""
+    import threading
+
+    from kaflow_spark.app import _write_concurrently
+
+    sc = spark.sparkContext
+    seen: dict[str, object] = {}
+    sc.setJobGroup("micro-batch-7", "replay")
+    try:
+        _write_concurrently(
+            lambda: seen.update(out=threading.get_ident()),
+            lambda: seen.update(
+                dlq=threading.get_ident(),
+                group=sc.getLocalProperty("spark.jobGroup.id"),
+            ),
+        )
+
+        def failing_dlq() -> None:
+            raise ValueError("dlq sink down")
+
+        with pytest.raises(ValueError, match="dlq sink down"):
+            _write_concurrently(lambda: seen.update(second_out=True), failing_dlq)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert seen["out"] == threading.get_ident() != seen["dlq"]
+    assert seen["group"] == "micro-batch-7"
+    assert seen["second_out"] is True
