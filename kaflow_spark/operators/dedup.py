@@ -32,64 +32,16 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
 from kaflow_spark.functions.vectors import cosine  # noqa: F401 - public re-export
+from kaflow_spark.operators import memo
 
 _MERSENNE = (1 << 31) - 1  # 2^31-1, prime; keeps a*x+b inside int64
 
 
-def _stable_session_key(df: DataFrame):
-    """Memo-safe identity for a frame's session: the Spark
-    applicationId — stable for the life of the JVM context and never
-    reused after a stop/start, unlike ``id(sparkSession)`` whose CPython
-    address can alias a NEW session to a stale persisted frame once the
-    old object is GC'd (ADVICE r12). Sessions sharing one context share
-    the CacheManager, so aliasing across ``newSession()`` instances is
-    safe by construction. Returns None (memo disabled) when the JVM
-    context is unreachable (connect mode)."""
-    try:
-        return df.sparkSession.sparkContext.applicationId
-    except Exception:
-        return None
-
-
-# memoized (_sid, _sh) shingle frames keyed by (applicationId, corpus
-# plan semanticHash, grain, k): registry queries rebuild an IDENTICAL
-# shingle plan per invocation, and re-persisting a semantically-equal
-# plan on a fresh DataFrame instance makes CacheManager warn "Asked to
-# cache already cached data" on every repeat while silently relying on
-# plan-matching rather than an explicit shared frame (round-12 verdict
-# item 2). The memo value is [frame, materialized] — an eager caller
-# arriving after a lazy one triggers the one-time count() itself.
-_SHINGLE_MEMO: dict[tuple, list] = {}
-
-
 def release_shingle_frames() -> int:
-    """Unpersist every memoized shingle frame; returns how many were
-    released. Call after rewriting a corpus a frame was built over
-    (the catalog.clear_load_cache discipline, CLAUDE.md trap 10)."""
-    n = 0
-    while _SHINGLE_MEMO:
-        _, (df, _mat) = _SHINGLE_MEMO.popitem()
-        try:
-            df.unpersist()
-            n += 1
-        except Exception:
-            pass
-    return n
-
-
-def _memoized_shingles(key: tuple | None, build, eager: bool) -> DataFrame:
-    if key is not None and key in _SHINGLE_MEMO:
-        entry = _SHINGLE_MEMO[key]
-        if eager and not entry[1]:
-            entry[0].count()
-            entry[1] = True
-        return entry[0]
-    sh = build().persist()
-    if eager:
-        sh.count()
-    if key is not None:
-        _SHINGLE_MEMO[key] = [sh, eager]
-    return sh
+    """Unpersist every memoized shingle and MinHash/SimHash signature
+    frame and return how many were released. Call it after rewriting
+    a corpus they were built over (:mod:`~kaflow_spark.operators.memo`)."""
+    return memo.release("shingles")
 
 
 def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -373,7 +325,7 @@ def _shingles_sql(text_col: str, k: int) -> str:
 
 
 def shingle_frame(
-    df: DataFrame, id_col: str, text_col: str, k: int = 5, eager: bool = True
+    df: DataFrame, id_col: str, text_col: str, k: int = 5
 ) -> DataFrame:
     """Persisted ``(_sid, _sh)`` frame of distinct shingle hashes.
 
@@ -384,13 +336,6 @@ def shingle_frame(
     stages — at 100 TB the frame is ~8 B x shingles per doc, far
     smaller than re-reading and re-shingling the corpus.
 
-    ``eager`` materializes the cache before returning: the consumers
-    fan out into stages that run CONCURRENTLY, and concurrent stages
-    race on not-yet-cached partitions — each recomputes them, which
-    silently doubles the shingling cost. One count() up front makes
-    every consumer a cache read (applies on clusters, not just
-    local mode).
-
     Deliberately NOT fanned out (operators/parallelism.py): measured
     3-rep A/B at sf0.1 shows every shingle_frame consumer slower with
     a 32-way repartition ahead of the persist (q41 1.22→1.41 s, q83
@@ -400,33 +345,17 @@ def shingle_frame(
     overhead at fixture scale; single-shot heavy projections
     (contamination, span dedup) are where fan_out wins.
 
-    Memoized per (applicationId, corpus plan semanticHash, id, text,
-    k): a repeat invocation returns the SAME persisted DataFrame
-    object with zero jobs and — load-bearing — zero re-``persist()``
-    registrations (the CacheManager already-cached WARN, round-12
-    verdict item 2). :func:`release_shingle_frames` is the
-    mutable-corpus escape hatch."""
-    key = None
-    app = _stable_session_key(df)
-    if app is not None:
-        try:
-            key = (
-                app,
-                df._jdf.queryExecution().analyzed().semanticHash(),
-                "char",
-                id_col,
-                text_col,
-                k,
-            )
-        except Exception:
-            key = None
+    Memoized and materialized per (corpus plan, id, text, k) in
+    :mod:`~kaflow_spark.operators.memo`; :func:`release_shingle_frames`
+    frees it."""
 
     def build() -> DataFrame:
         return df.select(
             F.col(id_col).alias("_sid"), char_shingles(text_col, k).alias("_sh")
         )
 
-    return _memoized_shingles(key, build, eager)
+    key = memo.plan_key(df, "char", id_col, text_col, k)
+    return memo.persisted("shingles", key, build)
 
 
 def minhash_signature_expr(
@@ -566,8 +495,8 @@ def minhash_lsh_candidates(
     the price.
     """
     # validate the pairing BEFORE the S x H signature kernel runs:
-    # failing after sig.count() would bill the full MinHash cost (and
-    # leak a persisted frame) to a call that was never going to work
+    # failing after the signature frame is built would bill the full
+    # MinHash cost to a call that was never going to work
     if (side_a is None) != (side_b is None):
         raise ValueError(
             "side_a and side_b must be given together (disjoint id "
@@ -576,23 +505,34 @@ def minhash_lsh_candidates(
             "restricted ids — self-pairs and mirrored duplicates"
         )
     rows_per_band = num_hashes // bands
-    # signatures computed ONCE (the expensive S x H kernel) and
-    # persisted: the plan reads them three times (banding + both pair
-    # sides) and recomputation would triple the kernel cost. 512 B x
-    # n_docs spills to disk gracefully at scale.
+    # signatures computed ONCE (the expensive S x H kernel), persisted
+    # and materialized in the shingle owner's memo: the plan reads them
+    # three times (banding + both pair sides) from concurrent stages.
+    # 512 B x n_docs spills to disk gracefully at scale.
     if shingles is not None:
-        sig = shingles.select(
-            F.col("_sid").alias("_id"),
-            minhash_signature_from_shingles("_sh", num_hashes, seed).alias("_sig"),
-        ).persist()
+        key = memo.plan_key(shingles, "minhash", num_hashes, seed)
+
+        def build() -> DataFrame:
+            return shingles.select(
+                F.col("_sid").alias("_id"),
+                minhash_signature_from_shingles("_sh", num_hashes, seed).alias(
+                    "_sig"
+                ),
+            )
     else:
-        sig = df.select(
-            F.col(id_col).alias("_id"),
-            minhash_signature(text_col, shingle_k, num_hashes, seed).alias("_sig"),
-        ).persist()
-    # materialize before the fan-out: banding and both re-attach sides
-    # run as concurrent stages and would race-recompute the kernel
-    sig.count()
+        key = memo.plan_key(
+            df, "minhash", id_col, text_col, shingle_k, num_hashes, seed
+        )
+
+        def build() -> DataFrame:
+            return df.select(
+                F.col(id_col).alias("_id"),
+                minhash_signature(text_col, shingle_k, num_hashes, seed).alias(
+                    "_sig"
+                ),
+            )
+
+    sig = memo.persisted("shingles", key, build)
     band_structs = [
         F.struct(
             F.lit(b).alias("band"),
@@ -714,30 +654,11 @@ def ngram_jaccard_pairs(
     )
 
 
-# verified near-dup pair frames persisted by verified_pair_frame —
-# the documented session-shared set (CLAUDE.md trap 16 posture made
-# explicit). Keyed by (session, corpus plan, params) so a repeat
-# caller gets the SAME DataFrame object back with zero jobs — the
-# catalog.load memo pattern (without it each consumer re-walked the
-# candidate builder, whose internal eager sig.count() costs ~1.5 s of
-# cache-read job overhead per call). release_verified_pair_frames()
-# frees them.
-_SHARED_PAIR_FRAMES: dict[tuple, list] = {}  # key -> [frame, materialized]
-
-
 def release_verified_pair_frames() -> int:
-    """Unpersist every shared verified-pair frame; returns how many
-    were released. Call after rewriting the corpus a frame was built
-    over (the catalog.clear_load_cache discipline)."""
-    n = 0
-    while _SHARED_PAIR_FRAMES:
-        _, (df, _mat) = _SHARED_PAIR_FRAMES.popitem()
-        try:
-            df.unpersist()
-            n += 1
-        except Exception:
-            pass
-    return n
+    """Unpersist every shared verified-pair frame and return how many
+    were released. Call it after rewriting a corpus they were built
+    over (:mod:`~kaflow_spark.operators.memo`)."""
+    return memo.release("verified_pairs")
 
 
 def verified_pair_frame(
@@ -749,7 +670,6 @@ def verified_pair_frame(
     min_bands: int = 2,
     est_screen: float = 0.7,
     threshold: float = 0.9,
-    eager: bool = True,
 ) -> DataFrame:
     """Persisted VERIFIED near-duplicate pair frame ``(id_a, id_b,
     jaccard)`` with exact n-gram Jaccard ``>= threshold`` — the one
@@ -769,59 +689,28 @@ def verified_pair_frame(
     odds; on a cluster this is exactly the staged frame a production
     dedup-QA suite would materialize once per corpus snapshot.
 
-    Re-invocations over the same (session, corpus plan, params)
-    return the SAME DataFrame object from a module memo with zero
-    jobs; even without a memo hit, CacheManager matches the analyzed
-    plan so an identical rebuild reads the one materialization.
-    ``eager`` materializes before returning — concurrent consumer
-    stages would otherwise race-recompute not-yet-cached partitions
-    (the shingle_frame rationale). :func:`release_verified_pair_frames`
-    frees the memo and caches."""
-    memo_key = None
-    app = _stable_session_key(df)
-    if app is not None:
-        try:
-            # applicationId, not id(sparkSession): a GC'd address can
-            # alias a NEW session to a stale persisted frame (ADVICE
-            # r12); the app id dies with the context that owns the cache
-            memo_key = (
-                app,
-                df._jdf.queryExecution().analyzed().semanticHash(),
-                id_col,
-                text_col,
-                k,
-                min_bands,
-                est_screen,
-                threshold,
+    Memoized and materialized per (corpus plan, params) in
+    :mod:`~kaflow_spark.operators.memo`: a re-invocation gets the SAME
+    DataFrame object back with zero jobs.
+    :func:`release_verified_pair_frames` frees it."""
+
+    def build() -> DataFrame:
+        sh = shingle_frame(df, id_col, text_col, k)
+        cand = (
+            minhash_lsh_candidates(
+                df, id_col, text_col, min_bands=min_bands, shingles=sh
             )
-        except Exception:
-            pass  # connect-mode or API drift: build uncached
-    if memo_key is not None and memo_key in _SHARED_PAIR_FRAMES:
-        entry = _SHARED_PAIR_FRAMES[memo_key]
-        if eager and not entry[1]:
-            # a lazy first call memoized an unmaterialized frame; the
-            # first eager consumer pays the one-time count (ADVICE r12)
-            entry[0].count()
-            entry[1] = True
-        return entry[0]
-    sh = shingle_frame(df, id_col, text_col, k)
-    cand = (
-        minhash_lsh_candidates(
-            df, id_col, text_col, min_bands=min_bands, shingles=sh
+            .filter(F.col("est_jaccard") >= est_screen)
+            .select("id_a", "id_b")
         )
-        .filter(F.col("est_jaccard") >= est_screen)
-        .select("id_a", "id_b")
+        return ngram_jaccard_pairs(
+            df, cand, id_col, text_col, k, shingles=sh
+        ).filter(F.col("jaccard") >= threshold)
+
+    key = memo.plan_key(
+        df, id_col, text_col, k, min_bands, est_screen, threshold
     )
-    pairs = (
-        ngram_jaccard_pairs(df, cand, id_col, text_col, k, shingles=sh)
-        .filter(F.col("jaccard") >= threshold)
-        .persist()
-    )
-    if eager:
-        pairs.count()
-    if memo_key is not None:
-        _SHARED_PAIR_FRAMES[memo_key] = [pairs, eager]
-    return pairs
+    return memo.persisted("verified_pairs", key, build)
 
 
 def prefix_filter_candidates(
@@ -1036,17 +925,26 @@ def simhash_near_dups(
     ``shingles`` takes a precomputed :func:`shingle_frame` (its k
     overrides ``ngram``) so a pipeline with an exact-verify stage
     shingleizes the corpus once."""
-    # persisted + materialized: blocking consumes the signatures from
-    # concurrent stages; the vote kernel must run once
+    # persisted + materialized in the shingle owner's memo: blocking
+    # consumes the signatures from concurrent stages; the vote kernel
+    # must run once
     if shingles is not None:
-        sigs = shingles.select(
-            F.col("_sid").alias("_id"), simhash_from_shingles("_sh").alias("_sh")
-        ).persist()
+        key = memo.plan_key(shingles, "simhash")
+
+        def build() -> DataFrame:
+            return shingles.select(
+                F.col("_sid").alias("_id"),
+                simhash_from_shingles("_sh").alias("_sh"),
+            )
     else:
-        sigs = df.select(
-            F.col(id_col).alias("_id"), simhash(text_col, ngram).alias("_sh")
-        ).persist()
-    sigs.count()
+        key = memo.plan_key(df, "simhash", id_col, text_col, ngram)
+
+        def build() -> DataFrame:
+            return df.select(
+                F.col(id_col).alias("_id"), simhash(text_col, ngram).alias("_sh")
+            )
+
+    sigs = memo.persisted("shingles", key, build)
     mask = (1 << block_bits) - 1
     chunk_structs = [
         F.struct(
@@ -1499,7 +1397,7 @@ def hamming_pairs(
 
 
 def wordgram_shingle_frame(
-    df: DataFrame, id_col: str, text_col: str, n: int = 5, eager: bool = True
+    df: DataFrame, id_col: str, text_col: str, n: int = 5
 ) -> DataFrame:
     """Persisted ``(_sid, _sh)`` frame of distinct WORD-``n``-gram
     hashes — the word-grain sibling of :func:`shingle_frame` for
@@ -1513,21 +1411,6 @@ def wordgram_shingle_frame(
     (released by :func:`release_shingle_frames`)."""
     from kaflow_spark.operators.curation import word_ngrams, words_of
 
-    key = None
-    app = _stable_session_key(df)
-    if app is not None:
-        try:
-            key = (
-                app,
-                df._jdf.queryExecution().analyzed().semanticHash(),
-                "word",
-                id_col,
-                text_col,
-                n,
-            )
-        except Exception:
-            key = None
-
     def build() -> DataFrame:
         w = df.select(
             F.col(id_col).alias("_sid"), words_of(text_col).alias("_w")
@@ -1537,7 +1420,8 @@ def wordgram_shingle_frame(
             F.transform(F.col("_g"), lambda g: F.xxhash64(g)).alias("_sh"),
         )
 
-    return _memoized_shingles(key, build, eager)
+    key = memo.plan_key(df, "word", id_col, text_col, n)
+    return memo.persisted("shingles", key, build)
 
 
 def intra_doc_repetition(

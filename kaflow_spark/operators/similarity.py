@@ -23,6 +23,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from kaflow_spark.functions.vectors import cosine, hyperplane_sign_bits
+from kaflow_spark.operators import memo
 
 
 def _query_lit(query: list[float]) -> F.Column:
@@ -467,28 +468,11 @@ def semantic_dup_pairs(
     return pairs.dropDuplicates(["id_a", "id_b"])
 
 
-# shared verified SEMANTIC pair frames, persisted by
-# semantic_pair_frame — the embedding-space twin of
-# operators/dedup.verified_pair_frame: one IVF fit + assignment +
-# in-list verify materialization per (session, corpus plan, params),
-# consumed by the whole q253-q256 family. Values are
-# [frame, materialized]; release_semantic_pair_frames() frees them.
-_SEMANTIC_PAIR_FRAMES: dict[tuple, list] = {}
-
-
 def release_semantic_pair_frames() -> int:
-    """Unpersist every shared semantic pair frame; returns how many
-    were released. Call after rewriting the corpus a frame was built
-    over (the catalog.clear_load_cache discipline)."""
-    n = 0
-    while _SEMANTIC_PAIR_FRAMES:
-        _, (df, _mat) = _SEMANTIC_PAIR_FRAMES.popitem()
-        try:
-            df.unpersist()
-            n += 1
-        except Exception:
-            pass
-    return n
+    """Unpersist every shared semantic pair frame and return how many
+    were released. Call it after rewriting a corpus they were built
+    over (:mod:`~kaflow_spark.operators.memo`)."""
+    return memo.release("semantic_pairs")
 
 
 def semantic_pair_frame(
@@ -500,57 +484,37 @@ def semantic_pair_frame(
     n_lists: int = 16,
     assign_p: int = 2,
     seed: int = 42,
-    eager: bool = True,
 ) -> DataFrame:
     """Persisted VERIFIED semantic near-duplicate pair frame
     ``(id_a, id_b, cos)`` — :func:`semantic_dup_pairs` behind the
     explicit-sharing memo the lexical family uses
     (operators/dedup.verified_pair_frame): the q253-q256 suite all
     consume ONE IVF fit + multi-assignment + in-list verify
-    materialization per (session, corpus plan, params) instead of
-    each re-running the sampled k-means and the Arrow assignment
-    pass. The pair set is churn-bounded and tiny next to the corpus;
-    on a cluster this is the staged frame a production semantic-dedup
+    materialization per (corpus plan, params) instead of each
+    re-running the sampled k-means and the Arrow assignment pass. The
+    pair set is churn-bounded and tiny next to the corpus; on a
+    cluster this is the staged frame a production semantic-dedup
     suite persists once per corpus snapshot, exactly beside its
-    lexical twin. Keyed on applicationId (never reused after a
-    context stop, unlike ``id(session)``) + the corpus plan's
-    semanticHash + every recall-relevant knob;
-    :func:`release_semantic_pair_frames` is the mutable-corpus
-    escape hatch."""
-    memo_key = None
-    try:
-        memo_key = (
-            df.sparkSession.sparkContext.applicationId,
-            df._jdf.queryExecution().analyzed().semanticHash(),
+    lexical twin. Memoized in :mod:`~kaflow_spark.operators.memo` on
+    the corpus plan + every recall-relevant knob;
+    :func:`release_semantic_pair_frames` is the mutable-corpus escape
+    hatch."""
+
+    def build() -> DataFrame:
+        return semantic_dup_pairs(
+            df,
             id_col,
             vec_col,
-            float(threshold),
-            n_lists,
-            assign_p,
-            seed,
+            threshold=threshold,
+            n_lists=n_lists,
+            assign_p=assign_p,
+            seed=seed,
         )
-    except Exception:
-        pass  # connect-mode or API drift: build uncached
-    if memo_key is not None and memo_key in _SEMANTIC_PAIR_FRAMES:
-        entry = _SEMANTIC_PAIR_FRAMES[memo_key]
-        if eager and not entry[1]:
-            entry[0].count()
-            entry[1] = True
-        return entry[0]
-    pairs = semantic_dup_pairs(
-        df,
-        id_col,
-        vec_col,
-        threshold=threshold,
-        n_lists=n_lists,
-        assign_p=assign_p,
-        seed=seed,
-    ).persist()
-    if eager:
-        pairs.count()
-    if memo_key is not None:
-        _SEMANTIC_PAIR_FRAMES[memo_key] = [pairs, eager]
-    return pairs
+
+    key = memo.plan_key(
+        df, id_col, vec_col, float(threshold), n_lists, assign_p, seed
+    )
+    return memo.persisted("semantic_pairs", key, build)
 
 
 def similarity_join(

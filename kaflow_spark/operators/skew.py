@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kaflow_spark.operators import memo
+
 
 def salted_aggregate(
     df: DataFrame,
@@ -100,52 +102,15 @@ def key_histogram(df: DataFrame, key: str, top: int = 20) -> DataFrame:
 AUTO_SALT_TARGET_PAIRS = 2_000_000
 AUTO_SALT_MAX = 32
 
-# keyed frames persisted by the auto-salt probe (see
-# choose_bucket_salt): the probe action materializes the cache so the
-# generator's pair join reads it instead of re-running the explode
-# lineage. Tracked here so tests/long-lived apps can release them.
-_PROBE_CACHED: list[DataFrame] = []
-
-# memoized probe results keyed by (session id, analyzed-plan semantic
-# hash, policy knobs): the hottest-bucket cardinality is a pure
-# function of the keyed frame's DATA, and for file-backed corpora the
-# analyzed plan pins the data (fixture tables are immutable by the
-# catalog.load contract; local-relation test frames embed their rows
-# in the plan, so distinct data can never alias). Re-invocations of a
-# registry query rebuild an IDENTICAL keyed plan on the catalog-cached
-# scan, so the probe job — whose local floor is ~1 s of pure job
-# overhead, more than some generators' entire unsalted join — runs
-# once per (session, corpus), not once per call. Mirrors production:
-# a recurring pipeline profiles its corpus skew once, not per query.
-_PROBE_MEMO: dict[tuple, int] = {}
-
-# (session id, plan semanticHash) pairs whose keyed frame is ALREADY
-# persist()-registered: a rebuilt semantically-equal plan arrives on a
-# fresh DataFrame instance, and re-persisting it makes CacheManager log
-# "Asked to cache already cached data" on every repeat invocation while
-# silently relying on plan-matching instead of the memo (round-12
-# verdict item 2). Registration happens at most once per plan.
-_PROBE_PERSISTED: set[tuple] = set()
-
 
 def release_probe_caches() -> int:
-    """Unpersist every keyed frame the auto-salt probe cached and drop
-    the memoized probe results; returns how many frames were released.
-    Safe to call any time — frames whose consumers already ran lose
-    nothing, and a future auto call simply re-probes. Call this after
-    rewriting a parquet path a probe has seen (the
-    catalog.clear_load_cache discipline, CLAUDE.md trap 10)."""
-    _PROBE_MEMO.clear()
-    _PROBE_PERSISTED.clear()
-    n = 0
-    while _PROBE_CACHED:
-        df = _PROBE_CACHED.pop()
-        try:
-            df.unpersist()
-            n += 1
-        except Exception:
-            pass
-    return n
+    """Unpersist every keyed frame the auto-salt probe cached, drop
+    the memoized probe results, and return how many frames were
+    released. Safe to call any time — frames whose consumers already
+    ran lose nothing, and a future auto call simply re-probes. Call it
+    after rewriting a parquet path a probe has seen
+    (:mod:`~kaflow_spark.operators.memo`)."""
+    return memo.release("probe")
 
 
 def choose_bucket_salt(
@@ -183,29 +148,30 @@ def choose_bucket_salt(
       cannot rank buckets (they estimate bytes, not key skew), so a
       probe action is the honest trigger; it is skipped exactly when
       the algebraic cap already proves it redundant.
-    - **the probe result is memoized** per (session, analyzed-plan
-      semantic hash, knobs): round-11 measured the probe re-running
-      the generator's explode lineage as a separate job at +45–73%
-      steady-state on hamming/edit-distance, and the probe JOB itself
-      has a ~1 s local floor — more than edit-distance's entire
+    - **the probe result is memoized** per (keyed plan, knobs) in
+      :mod:`~kaflow_spark.operators.memo`: round-11 measured the probe
+      re-running the generator's explode lineage as a separate job at
+      +45–73% steady-state on hamming/edit-distance, and the probe JOB
+      itself has a ~1 s local floor — more than edit-distance's entire
       unsalted join. Re-invocations of a registry query rebuild an
-      identical keyed plan over the catalog-cached scan, so the memo
-      makes every call after the first probe-free (steady-state auto
-      == explicit salt, A/B-asserted in test_sources_skew). Data that
-      changes under a plan must call :func:`release_probe_caches`
-      (same discipline as catalog.clear_load_cache, trap 10).
-    - ``persist_keyed=True`` additionally persists the keyed frame so
-      the first probe's action doubles as cache materialization and
-      the pair join reads the cache instead of re-running the lineage
-      (CacheManager matches the analyzed plan, so the caller's own
-      reference hits it with no call-site change). Opt-in per
-      generator by measured A/B: hamming's banding lineage (fan-out +
-      window) is expensive enough that auto-with-persist BEATS
-      salt=1 (2.01 vs 2.23 s at sf0.1); edit-distance's bare explode
-      is so cheap that the cache write+read LOSES to recompute
-      (cached join 1.28 s vs 0.83 s uncached) — it relies on the memo
-      alone. Frames are tracked in a module registry;
-      :func:`release_probe_caches` frees them.
+      identical keyed plan, so every call after the first is
+      probe-free (steady-state auto == explicit salt, A/B-asserted in
+      test_sources_skew). Mirrors production: a recurring pipeline
+      profiles its corpus skew once, not per query.
+    - ``persist_keyed=True`` additionally persists the keyed frame,
+      once per plan, so the first probe's action doubles as cache
+      materialization and the pair join reads the cache instead of
+      re-running the lineage (CacheManager matches the analyzed plan,
+      so the caller's own reference hits it with no call-site change).
+      The persist is keyed on the plan alone, so a True caller after
+      a False caller of the same plan still gets its cache (ADVICE
+      r12). Opt-in per generator by measured A/B: hamming's banding
+      lineage (fan-out + window) is expensive enough that
+      auto-with-persist BEATS salt=1 (2.01 vs 2.23 s at sf0.1);
+      edit-distance's bare explode is so cheap that the cache
+      write+read LOSES to recompute (cached join 1.28 s vs 0.83 s
+      uncached) — it relies on the memo alone.
+      :func:`release_probe_caches` frees the frames and the memo.
     - salt so each salted cell's pair work fits the budget:
       ``ceil(hot / sqrt(2 * target_pairs))``, clamped to
       ``[2, max_salt]`` (replication cost is salt+1 copies of the
@@ -215,58 +181,31 @@ def choose_bucket_salt(
     mx = AUTO_SALT_MAX if max_salt is None else max_salt
     if known_cap is not None and known_cap * (known_cap - 1) // 2 <= target:
         return 1
-    memo_key = None
-    plan_key = None
-    try:
-        sem = keyed._jdf.queryExecution().analyzed().semanticHash()
-        # applicationId, not id(session): a recycled CPython address can
-        # alias a NEW session to a stale memo/persist entry after a
-        # stop/start (the dedup.py _stable_session_key rationale —
-        # ADVICE r13)
-        app = keyed.sparkSession.sparkContext.applicationId
-        plan_key = (app, sem)
-        memo_key = plan_key + (target, mx, count_col, tuple(key_cols))
-    except Exception:
-        pass  # connect-mode or API drift: probe uncached
-    if memo_key is not None and memo_key in _PROBE_MEMO:
-        # the memo is keyed on the PLAN + knobs, not persist_keyed: a
-        # persist_keyed=True caller arriving after a False caller
-        # probed the same plan must still get its cache (it would
-        # otherwise silently re-run the expensive lineage — ADVICE
-        # r12), and a semantically-equal REBUILT plan must not
-        # re-register a persist (the CacheManager "already cached"
-        # WARN on every repeat invocation — round-12 verdict item 2)
-        if persist_keyed and plan_key not in _PROBE_PERSISTED:
-            keyed.persist()
-            _PROBE_CACHED.append(keyed)
-            _PROBE_PERSISTED.add(plan_key)
-        return _PROBE_MEMO[memo_key]
-    if persist_keyed and (
-        plan_key is None or plan_key not in _PROBE_PERSISTED
-    ):
-        keyed.persist()
-        _PROBE_CACHED.append(keyed)
-        if plan_key is not None:
-            _PROBE_PERSISTED.add(plan_key)
-    if count_col is not None:
-        hot = keyed.agg(F.max(count_col)).collect()[0][0]
-    else:
-        hot = (
-            keyed.groupBy(*key_cols)
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .agg(F.max("_n"))
-            .collect()[0][0]
-        )
-    hot = int(hot or 0)
-    if hot * (hot - 1) // 2 <= target:
-        salt = 1
-    else:
+    plan = memo.plan_key(keyed)
+    if persist_keyed:
+        # no count: the probe action below (or, on a memo hit, the
+        # caller's pair join) materializes the cache
+        memo.memoized("probe", plan, keyed.persist)
+
+    def probe() -> int:
+        if count_col is not None:
+            hot = keyed.agg(F.max(count_col)).collect()[0][0]
+        else:
+            hot = (
+                keyed.groupBy(*key_cols)
+                .agg(F.count(F.lit(1)).alias("_n"))
+                .agg(F.max("_n"))
+                .collect()[0][0]
+            )
+        hot = int(hot or 0)
+        if hot * (hot - 1) // 2 <= target:
+            return 1
         import math
 
-        salt = max(2, min(mx, math.ceil(hot / math.sqrt(2.0 * target))))
-    if memo_key is not None:
-        _PROBE_MEMO[memo_key] = salt
-    return salt
+        return max(2, min(mx, math.ceil(hot / math.sqrt(2.0 * target))))
+
+    knobs = (target, mx, count_col, tuple(key_cols))
+    return memo.memoized("probe", None if plan is None else plan + knobs, probe)
 
 
 def salted_self_pairs(

@@ -7,13 +7,24 @@ DataFrame instance in the miss path — shingle_frame built and persisted
 a NEW frame per call, so repeat cost rode CacheManager plan-matching,
 not the memo. These tests pin the fix structurally: a repeat invocation
 returns the SAME DataFrame object, registers ZERO new persists (JVM
-persistent-RDD census), and the lazy-then-eager / persist-after-lazy
-orderings the ADVICE flagged behave.
+persistent-RDD census), and the persist-after-lazy probe ordering the
+ADVICE flagged behaves. Every memo lives in operators/memo's one
+registry, read here by owner.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
+
+from kaflow_spark.operators import memo
+
+
+def _entries(owner: str) -> dict:
+    return memo._MEMO.get(owner, {})
+
+
+def _frames(owner: str) -> list:
+    return [v for v in _entries(owner).values() if isinstance(v, DataFrame)]
 
 
 def _persistent_rdd_count(spark) -> int:
@@ -52,13 +63,13 @@ def test_shingle_frame_memo_identity_rebuilt_plan(spark, tmp_path):
     # fresh DataFrame instance over the same files = rebuilt plan
     sh2 = dedup.shingle_frame(spark.read.parquet(path), "doc_id", "text", 5)
     assert sh2 is sh1
-    assert len(dedup._SHINGLE_MEMO) == 1
+    assert len(_entries("shingles")) == 1
     assert _persistent_rdd_count(spark) == n_persisted
     sh2.count()  # a consumer action must not register anything either
     assert _persistent_rdd_count(spark) == n_persisted
     # different k = different frame
     sh3 = dedup.shingle_frame(spark.read.parquet(path), "doc_id", "text", 7)
-    assert sh3 is not sh1 and len(dedup._SHINGLE_MEMO) == 2
+    assert sh3 is not sh1 and len(_entries("shingles")) == 2
     assert dedup.release_shingle_frames() == 2
     assert not sh1.storageLevel.useMemory
 
@@ -78,47 +89,6 @@ def test_wordgram_shingle_frame_memoizes(spark, tmp_path):
     # word and char grain never alias, even at equal k
     c = dedup.shingle_frame(spark.read.parquet(path), "doc_id", "text", 5)
     assert c is not w1
-    dedup.release_shingle_frames()
-
-
-def test_shingle_frame_lazy_then_eager_materializes(spark, tmp_path):
-    """ADVICE r12: an eager=False first call memoizes an unmaterialized
-    frame; the first eager consumer must trigger the one-time count and
-    flip the memo's materialized flag (not silently skip it)."""
-    from kaflow_spark.operators import dedup
-
-    dedup.release_shingle_frames()
-    path = _docs(spark, tmp_path, "lazydocs")
-    sh1 = dedup.shingle_frame(
-        spark.read.parquet(path), "doc_id", "text", 5, eager=False
-    )
-    (key,) = dedup._SHINGLE_MEMO
-    assert dedup._SHINGLE_MEMO[key][1] is False
-    sh2 = dedup.shingle_frame(
-        spark.read.parquet(path), "doc_id", "text", 5, eager=True
-    )
-    assert sh2 is sh1
-    assert dedup._SHINGLE_MEMO[key][1] is True
-    dedup.release_shingle_frames()
-
-
-def test_verified_pair_frame_lazy_then_eager(spark, tmp_path):
-    from kaflow_spark.operators import dedup
-
-    dedup.release_verified_pair_frames()
-    dedup.release_shingle_frames()
-    path = _docs(spark, tmp_path, "vdocs")
-    p1 = dedup.verified_pair_frame(
-        spark.read.parquet(path), "doc_id", "text", eager=False
-    )
-    (key,) = dedup._SHARED_PAIR_FRAMES
-    assert dedup._SHARED_PAIR_FRAMES[key][1] is False
-    p2 = dedup.verified_pair_frame(
-        spark.read.parquet(path), "doc_id", "text", eager=True
-    )
-    assert p2 is p1
-    assert dedup._SHARED_PAIR_FRAMES[key][1] is True
-    dedup.release_verified_pair_frames()
     dedup.release_shingle_frames()
 
 
@@ -177,11 +147,11 @@ def test_probe_no_repersist_on_rebuilt_plan(spark, tmp_path):
         spark.read.parquet(path), ["k"], persist_keyed=True
     )
     n_persisted = _persistent_rdd_count(spark)
-    assert len(skew._PROBE_CACHED) == 1
+    assert len(_frames("probe")) == 1
     skew.choose_bucket_salt(
         spark.read.parquet(path), ["k"], persist_keyed=True
     )
-    assert len(skew._PROBE_CACHED) == 1  # no second registration
+    assert len(_frames("probe")) == 1  # no second registration
     assert _persistent_rdd_count(spark) == n_persisted
     skew.release_probe_caches()
 
@@ -190,7 +160,7 @@ def test_stable_session_key_is_application_id(spark):
     """The memo session key must survive id() reuse: it is the Spark
     applicationId (never reused after stop/start), not the CPython
     address of the session object (ADVICE r12)."""
-    from kaflow_spark.operators.dedup import _stable_session_key
-
     df = spark.range(1)
-    assert _stable_session_key(df) == spark.sparkContext.applicationId
+    key = memo.plan_key(df, "k", 5)
+    assert key[0] == spark.sparkContext.applicationId
+    assert key[2:] == ("k", 5)

@@ -894,7 +894,7 @@ def test_verified_pair_frame_shared_memo(spark, tmp_path):
     shared set: a repeat call over the same corpus plan returns the
     SAME persisted DataFrame object (zero jobs), its rows equal the
     inline pipeline, and release_verified_pair_frames frees it."""
-    from kaflow_spark.operators import dedup
+    from kaflow_spark.operators import memo
     from kaflow_spark.operators.dedup import (
         minhash_lsh_candidates,
         ngram_jaccard_pairs,
@@ -931,4 +931,4 @@ def test_verified_pair_frame_shared_memo(spark, tmp_path):
 
     assert release_verified_pair_frames() == 1
     assert not p1.storageLevel.useMemory
-    assert len(dedup._SHARED_PAIR_FRAMES) == 0
+    assert not memo._MEMO.get("verified_pairs")

@@ -4,6 +4,8 @@ against the actual Catalyst output — a plan regression fails CI."""
 
 from __future__ import annotations
 
+import pytest
+
 from kaflow_spark.plans import (
     has_broadcast_join,
     has_partial_aggregate,
@@ -633,14 +635,57 @@ def test_q161_bfs_rounds_stay_equi_join(spark, sf_dir):
     assert "LeftAnti" in txt
 
 
-def test_q161_leaves_no_cache_entry(spark, sf_dir):
-    """q161 runs to a sink without persisting anything: a query that
-    caches a frame and never releases it holds executor memory for the
-    rest of the session."""
+def _release_memo_frames() -> None:
+    from kaflow_spark.operators.dedup import (
+        release_shingle_frames,
+        release_verified_pair_frames,
+    )
+    from kaflow_spark.operators.similarity import release_semantic_pair_frames
+    from kaflow_spark.operators.skew import release_probe_caches
+
+    release_shingle_frames()
+    release_verified_pair_frames()
+    release_semantic_pair_frames()
+    release_probe_caches()
+
+
+@pytest.mark.parametrize(
+    "query",
+    [
+        "q41_minhash_near_dup",
+        "q42_simhash_near_dup",
+        "q140_fuzzy_decontamination",
+        "q253_semantic_near_dup",
+        "q161_bfs_hops",
+    ],
+)
+def test_query_persists_only_memo_frames(spark, sf_dir, query):
+    """A query persists nothing but the shared frames of the memo
+    registry (q161: nothing at all), and releasing the registry empties
+    the CacheManager: a query that caches a frame nothing can release
+    holds executor memory for the rest of the session."""
+    from pyspark.sql import DataFrame
+
+    from kaflow_spark.operators import memo
+
+    _release_memo_frames()
     spark.catalog.clearCache()
-    df = REGISTRY["q161_bfs_hops"].spark(spark, sf_dir)
+    jsc = spark.sparkContext._jsc
+    df = REGISTRY[query].spark(spark, sf_dir)
     df.write.format("noop").mode("overwrite").save()
+    frames = [
+        v
+        for values in memo._MEMO.values()
+        for v in values.values()
+        if isinstance(v, DataFrame)
+    ]
+    assert all(f.storageLevel.useMemory for f in frames)
+    assert jsc.getPersistentRDDs().size() == len(frames)
+    if query == "q161_bfs_hops":
+        assert not frames
+    _release_memo_frames()
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert jsc.getPersistentRDDs().size() == 0
 
 
 def test_q162_per_doc_count_partition(spark, sf_dir):

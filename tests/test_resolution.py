@@ -95,7 +95,7 @@ def test_prefix_filter_recall_exact(spark, threshold):
         (6, base[:30]),                              # subset-ish small doc
     ]
     df = spark.createDataFrame(docs, ["doc_id", "text"])
-    sh = shingle_frame(df, "doc_id", "text", 5, eager=False)
+    sh = shingle_frame(df, "doc_id", "text", 5)
     sets = {
         r._sid: set(r._sh) for r in sh.collect()
     }

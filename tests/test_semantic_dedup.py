@@ -197,15 +197,15 @@ def test_semantic_queries_share_one_pair_frame(spark, sf_dir):
     """q254/q255 consume q253's shared frame: after one build, the
     consumers register zero new persistent RDDs (the
     verified_pair_frame discipline, embedding-space edition)."""
-    from kaflow_spark.operators import similarity
+    from kaflow_spark.operators import memo, similarity
     from kaflow_spark.queries import REGISTRY
 
     similarity.release_semantic_pair_frames()
     REGISTRY["q253_semantic_near_dup"].spark(spark, sf_dir).count()
     n_persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
-    assert len(similarity._SEMANTIC_PAIR_FRAMES) == 1
+    assert len(memo._MEMO["semantic_pairs"]) == 1
     REGISTRY["q254_semantic_dup_provenance"].spark(spark, sf_dir).count()
     REGISTRY["q255_semantic_dedup_summary"].spark(spark, sf_dir).count()
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == n_persisted
-    assert len(similarity._SEMANTIC_PAIR_FRAMES) == 1
+    assert len(memo._MEMO["semantic_pairs"]) == 1
     similarity.release_semantic_pair_frames()

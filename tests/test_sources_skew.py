@@ -329,7 +329,7 @@ def test_prefix_filter_bucket_salt_matches_plain(spark):
     )
 
     docs = _boiler_docs(spark)
-    sh = wordgram_shingle_frame(docs, "doc_id", "text", 5, eager=False)
+    sh = wordgram_shingle_frame(docs, "doc_id", "text", 5)
     plain = prefix_filter_candidates(sh, 0.8)
     salted = prefix_filter_candidates(sh, 0.8, bucket_salt=4)
     a = sorted((r["id_a"], r["id_b"]) for r in plain.collect())
@@ -339,7 +339,7 @@ def test_prefix_filter_bucket_salt_matches_plain(spark):
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
         fresh = prefix_filter_candidates(
-            wordgram_shingle_frame(docs, "doc_id", "text", 5, eager=False),
+            wordgram_shingle_frame(docs, "doc_id", "text", 5),
             0.8,
             bucket_salt=4,
         )
@@ -539,7 +539,7 @@ def test_prefix_filter_auto_salts_planted_boilerplate(spark, monkeypatch):
 
     monkeypatch.setattr(skew, "AUTO_SALT_TARGET_PAIRS", 1000)
     docs = _boiler_docs(spark)
-    sh = wordgram_shingle_frame(docs, "doc_id", "text", 5, eager=False)
+    sh = wordgram_shingle_frame(docs, "doc_id", "text", 5)
     auto = prefix_filter_candidates(sh, 0.8)  # defaults only
     plain = prefix_filter_candidates(sh, 0.8, bucket_salt=1)
     a = sorted((r["id_a"], r["id_b"]) for r in auto.collect())
@@ -549,7 +549,7 @@ def test_prefix_filter_auto_salts_planted_boilerplate(spark, monkeypatch):
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
         fresh = prefix_filter_candidates(
-            wordgram_shingle_frame(docs, "doc_id", "text", 5, eager=False),
+            wordgram_shingle_frame(docs, "doc_id", "text", 5),
             0.8,
         )
         assert _salted_exchange_present(fresh)
@@ -637,7 +637,7 @@ def test_choose_bucket_salt_memoizes_per_plan(spark, tmp_path):
     one probe, a REBUILT identical plan returns the memoized salt
     without running any job (proven by poisoning the memo entry and
     observing the poison come back)."""
-    from kaflow_spark.operators import skew
+    from kaflow_spark.operators import memo, skew
 
     skew.release_probe_caches()
     rows = [("hot", i) for i in range(3000)] + [
@@ -650,9 +650,10 @@ def test_choose_bucket_salt_memoizes_per_plan(spark, tmp_path):
         return spark.read.parquet(path)
 
     assert skew.choose_bucket_salt(keyed(), ["k"]) == 2
-    assert len(skew._PROBE_MEMO) == 1
-    (memo_key,) = skew._PROBE_MEMO
-    skew._PROBE_MEMO[memo_key] = 7  # poison: only a memo hit returns 7
+    probe_memo = memo._MEMO["probe"]
+    assert len(probe_memo) == 1
+    (memo_key,) = probe_memo
+    probe_memo[memo_key] = 7  # poison: only a memo hit returns 7
     assert skew.choose_bucket_salt(keyed(), ["k"]) == 7
     # a different knob is a different decision -> fresh probe
     assert skew.choose_bucket_salt(keyed(), ["k"], target_pairs=50) > 7

@@ -1118,7 +1118,7 @@ def main() -> None:
             d = d.unionAll(p)
 
         def run_q159(d=d):
-            sh = wordgram_shingle_frame(d, "doc_id", "text", 5, eager=False)
+            sh = wordgram_shingle_frame(d, "doc_id", "text", 5)
             try:
                 (
                     ngram_jaccard_pairs(
