@@ -33,6 +33,7 @@ from pyspark.sql.window import Window
 
 from kaflow_spark.functions.vectors import cosine  # noqa: F401 - public re-export
 from kaflow_spark.operators import memo
+from kaflow_spark.operators.skew import bucket_pairs
 
 _MERSENNE = (1 << 31) - 1  # 2^31-1, prime; keeps a*x+b inside int64
 
@@ -447,7 +448,6 @@ def minhash_lsh_candidates(
     shingles: DataFrame | None = None,
     side_a=None,
     side_b=None,
-    bucket_salt: int | str = "auto",
 ) -> DataFrame:
     """Near-duplicate candidate pairs via banded MinHash LSH.
 
@@ -482,17 +482,8 @@ def minhash_lsh_candidates(
     each bucket over the whole frame before the side split, so an
     over-cap bucket is dropped from both sides.
 
-    ``bucket_salt > 1`` routes the within-corpus bucket self-join
-    through :func:`operators.skew.salted_self_pairs` (triangle-salted
-    pair enumeration): for boilerplate-heavy corpora whose hot
-    buckets stay under ``max_bucket`` but dominate one reducer, the
-    quadratic pair work spreads over ``salt*(salt+1)/2`` join keys.
-    AQE's skew-join splitting cannot rescue this join (self-join
-    reuses one exchange; the bucket-cap window sits between shuffle
-    and join — both measured blockers, see test_sources_skew), so
-    salting is the working fallback. Identical output by
-    construction; ~``salt``x replication of the 24-byte band rows is
-    the price.
+    Hot buckets salt automatically: see
+    :func:`~kaflow_spark.operators.skew.bucket_pairs`.
     """
     # validate the pairing BEFORE the S x H signature kernel runs:
     # failing after the signature frame is built would bill the full
@@ -553,46 +544,25 @@ def minhash_lsh_candidates(
     counted = banded.withColumn(
         "_bn", F.count(F.lit(1)).over(Window.partitionBy("band", "bucket"))
     ).filter(F.col("_bn") <= max_bucket)
-    if bucket_salt == "auto":
+    if cross:
+        # disjoint sides: no within-set pairs to salt, no id_a < id_b
+        left = counted.select("band", "bucket", F.col("_id").alias("id_a"))
+        right = counted.select("band", "bucket", F.col("_id").alias("id_b"))
+        joined = left.filter(side_a(F.col("id_a"))).join(
+            right.filter(side_b(F.col("id_b"))), ["band", "bucket"]
+        )
+    else:
         # default max_bucket (1000) algebraically bounds any bucket's
         # pair work under the task budget, so the common case resolves
         # to salt 1 with ZERO probe cost; a raised cap triggers one
         # bounded max(_bn) probe over the cached-signature lineage
-        from kaflow_spark.operators.skew import choose_bucket_salt
-
-        bucket_salt = (
-            1
-            if cross
-            else choose_bucket_salt(
-                counted,
-                ["band", "bucket"],
-                known_cap=max_bucket,
-                count_col="_bn",
-            )
-        )
-    if bucket_salt > 1 and not cross:
-        # boilerplate-heavy corpora: spread each hot bucket's
-        # quadratic pair work over salt*(salt+1)/2 join keys — AQE
-        # cannot split this self-join itself (reused exchange +
-        # window above the shuffle; see salted_self_pairs)
-        from kaflow_spark.operators.skew import salted_self_pairs
-
-        joined = salted_self_pairs(
-            counted.select("band", "bucket", "_id"),
+        joined = bucket_pairs(
+            counted,
             ["band", "bucket"],
             "_id",
-            salt=bucket_salt,
+            known_cap=max_bucket,
+            count_col="_bn",
         )
-    else:
-        left = counted.select("band", "bucket", F.col("_id").alias("id_a"))
-        right = counted.select("band", "bucket", F.col("_id").alias("id_b"))
-        if side_a is not None:
-            left = left.filter(side_a(F.col("id_a")))
-        if side_b is not None:
-            right = right.filter(side_b(F.col("id_b")))
-        joined = left.join(right, ["band", "bucket"])
-        if not cross:
-            joined = joined.filter(F.col("id_a") < F.col("id_b"))
     pairs = (
         joined
         .groupBy("id_a", "id_b")
@@ -713,9 +683,7 @@ def verified_pair_frame(
     return memo.persisted("verified_pairs", key, build)
 
 
-def prefix_filter_candidates(
-    shingles: DataFrame, threshold: float, *, bucket_salt: int | str = "auto"
-) -> DataFrame:
+def prefix_filter_candidates(shingles: DataFrame, threshold: float) -> DataFrame:
     """Deterministic recall-1 candidate pairs for an EXACT Jaccard
     set-similarity self-join (AllPairs / PPJoin prefix filtering,
     Bayardo et al. WWW'07 — public algorithm), over a
@@ -741,16 +709,11 @@ def prefix_filter_candidates(
     shingles are exactly the ones the prefix drops.  Skew bound: the
     worst bucket is the most document-frequent shingle that still
     lands in some prefix, i.e. low-|A| documents — cap via
-    ``threshold`` (higher t, shorter prefixes), and when one prefix
-    token's bucket still exceeds a task budget (a templated corpus
-    whose RAREST shared token is the template id), ``bucket_salt > 1``
-    routes the token self-join through
-    :func:`~kaflow_spark.operators.skew.salted_self_pairs` — AQE's
-    skew split cannot fire here for the same measured reasons as the
-    MinHash bucket join (reused-exchange self-join). The set sizes
-    ride the salted join as payload columns, so the Jaccard size
-    filter needs no re-attach join; output identical by construction
-    (test-asserted pair-for-pair on the planted boilerplate fixture).
+    ``threshold`` (higher t, shorter prefixes); a prefix token whose
+    bucket still exceeds a task budget (a templated corpus whose
+    RAREST shared token is the template id) salts automatically, with
+    the set sizes riding as payload: see
+    :func:`~kaflow_spark.operators.skew.bucket_pairs`.
     """
     from pyspark.sql.window import Window
 
@@ -785,32 +748,17 @@ def prefix_filter_candidates(
         # join shuffle with zero recall impact
         & (F.col("df") >= 2)
     ).select("id", "h", "n")
-    if bucket_salt == "auto":
-        # prefix tokens have no algebraic cap (a templated corpus's
-        # rarest shared token is the template id) — one linear
-        # max-bucket probe decides; salt 1 in the healthy word-grain
-        # case (near-unique tokens, see CLAUDE.md trap 8)
-        from kaflow_spark.operators.skew import choose_bucket_salt
-
-        # persist_keyed: the ranked-prefix lineage (df join + per-doc
-        # window) is the expensive part — an unpersisted probe re-ran
-        # it at +80% cold (15.9 vs 8.8 s at sf0.1); with the probe
-        # materializing the cache the join reads short (id, h, n) rows
-        bucket_salt = choose_bucket_salt(prefix, ["h"], persist_keyed=True)
-    if bucket_salt > 1:
-        from kaflow_spark.operators.skew import salted_self_pairs
-
-        cand = salted_self_pairs(
-            prefix, ["h"], "id", salt=bucket_salt, payload_cols=["n"]
-        )
-    else:
-        a = prefix.select(
-            F.col("id").alias("id_a"), "h", F.col("n").alias("n_a")
-        )
-        b = prefix.select(
-            F.col("id").alias("id_b"), "h", F.col("n").alias("n_b")
-        )
-        cand = a.join(b, ["h"]).filter(F.col("id_a") < F.col("id_b"))
+    # prefix tokens have no algebraic cap (a templated corpus's rarest
+    # shared token is the template id) — one linear max-bucket probe
+    # decides; salt 1 in the healthy word-grain case (near-unique
+    # tokens, see CLAUDE.md trap 8). persist_keyed: the ranked-prefix
+    # lineage (df join + per-doc window) is the expensive part — an
+    # unpersisted probe re-ran it at +80% cold (15.9 vs 8.8 s at
+    # sf0.1); with the probe materializing the cache the join reads
+    # short (id, h, n) rows
+    cand = bucket_pairs(
+        prefix, ["h"], "id", payload_cols=["n"], persist_keyed=True
+    )
     return (
         cand.filter(
             (F.col("n_b") >= ceil_t("n_a"))
@@ -1232,7 +1180,6 @@ def hamming_pairs(
     *,
     max_dist: int = 1,
     max_bucket: int = 10_000,
-    bucket_salt: int | str = "auto",
     keep_keys: bool = False,
 ) -> DataFrame:
     """Fuzzy ENTITY-KEY matching: all equal-length pairs whose keys
@@ -1283,71 +1230,32 @@ def hamming_pairs(
     key distribution is untrusted, instead of discovering recall loss
     downstream.
 
-    ``bucket_salt > 1`` routes the blocking self-join through
-    :func:`~kaflow_spark.operators.skew.salted_self_pairs` — for the
-    cohort whose legitimate (sub-``max_bucket``) blocking bucket
-    still exceeds a task's budget. AQE's skew split is DOUBLY blocked
-    here: the self-join reuses one exchange AND the bucket-count
-    window sits between the shuffle and the join (the two measured
-    blockers). The raw keys ride the salted join as payload columns
-    so the exact-distance verify needs no re-attach join; identical
-    pair set by construction (test-asserted)."""
+    A cohort whose legitimate (sub-``max_bucket``) blocking bucket
+    still exceeds a task's budget salts automatically, with the raw
+    keys riding as payload: see
+    :func:`~kaflow_spark.operators.skew.bucket_pairs`."""
     banded = _hamming_banded(df, id_col, key_col, max_dist)
     counted = banded.withColumn(
         "_bn", F.count(F.lit(1)).over(Window.partitionBy("chunk", "_len", "proj"))
     ).filter((F.col("_bn") >= 2) & (F.col("_bn") <= max_bucket))
-    if bucket_salt == "auto":
-        # the default last-resort cap (10k) still admits a 50M-pair
-        # bucket — far over the task budget — so the probe is real
-        # here: one bounded max(_bn) over the banding lineage
-        from kaflow_spark.operators.skew import choose_bucket_salt
-
-        bucket_salt = choose_bucket_salt(
-            counted,
-            ["chunk", "_len", "proj"],
-            known_cap=max_bucket,
-            count_col="_bn",
-            # banding lineage (fan-out + window) is expensive enough
-            # that probe-materializes-cache BEATS the salt=1 reused
-            # exchange: 2.01 vs 2.23 s at sf0.1 (vs 2.88 s when the
-            # probe re-ran the lineage — the round-11 regression)
-            persist_keyed=True,
-        )
-    if bucket_salt > 1:
-        from kaflow_spark.operators.skew import salted_self_pairs
-
-        cand = salted_self_pairs(
-            counted,
-            ["chunk", "_len", "proj"],
-            "_id",
-            salt=bucket_salt,
-            payload_cols=["_k"],
-        ).select(
-            "id_a",
-            "id_b",
-            F.col("_k_a").alias("_ka"),
-            F.col("_k_b").alias("_kb"),
-        )
-    else:
-        left = counted.select(
-            "chunk",
-            "_len",
-            "proj",
-            F.col("_id").alias("id_a"),
-            F.col("_k").alias("_ka"),
-        )
-        right = counted.select(
-            "chunk",
-            "_len",
-            "proj",
-            F.col("_id").alias("id_b"),
-            F.col("_k").alias("_kb"),
-        )
-        cand = (
-            left.join(right, ["chunk", "_len", "proj"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b", "_ka", "_kb")
-        )
+    # the default last-resort cap (10k) still admits a 50M-pair bucket
+    # — far over the task budget — so the probe is real here: one
+    # bounded max(_bn) over the banding lineage
+    cand = bucket_pairs(
+        counted,
+        ["chunk", "_len", "proj"],
+        "_id",
+        payload_cols=["_k"],
+        known_cap=max_bucket,
+        count_col="_bn",
+        # banding lineage (fan-out + window) is expensive enough that
+        # probe-materializes-cache BEATS the salt=1 reused exchange:
+        # 2.01 vs 2.23 s at sf0.1 (vs 2.88 s when the probe re-ran the
+        # lineage — the round-11 regression)
+        persist_keyed=True,
+    ).select(
+        "id_a", "id_b", F.col("_k_a").alias("_ka"), F.col("_k_b").alias("_kb")
+    )
     if max_dist == 1:
         # d=1 fast path: for EQUAL-LENGTH strings, levenshtein <= 1
         # iff hamming <= 1, and the values coincide on that range (a
@@ -1466,7 +1374,6 @@ def minimizer_candidates(
     min_shared: int = 5,
     max_df: int = 100,
     unit: str = "char",
-    bucket_salt: int | str = "auto",
 ) -> DataFrame:
     """Near-dup candidate pairs from shared winnowing fingerprints
     (the MOSS screen, Schleimer et al. SIGMOD 2003) — the FOURTH
@@ -1497,14 +1404,10 @@ def minimizer_candidates(
     loss at sf0.1), while word grams are near-unique per document,
     so the word unit keeps both recall and a sparse join.
 
-    ``bucket_salt > 1`` routes the fingerprint self-join through
-    :func:`~kaflow_spark.operators.skew.salted_self_pairs` for the
-    corpus where one sub-``max_df`` fingerprint's bucket still
-    dominates a task (a near-``max_df`` boilerplate gram): same
-    measured AQE blockers as the MinHash bucket join, identical pair
-    set by construction (test-asserted); each shared gram still
-    yields exactly one (gram, pair) row, so the ``shared`` count is
-    unchanged.
+    A sub-``max_df`` fingerprint whose bucket still dominates a task
+    salts automatically (each shared gram still yields one (gram,
+    pair) row, so ``shared`` is unchanged): see
+    :func:`~kaflow_spark.operators.skew.bucket_pairs`.
 
     Returns (id_a, id_b, shared) with id_a < id_b."""
     # word grain uses the hashed (MOSS/robust-winnowing) selection:
@@ -1520,20 +1423,9 @@ def minimizer_candidates(
         F.col("_df") <= max_df
     )
     sel = sel.join(rare.select("gram"), "gram")
-    if bucket_salt == "auto":
-        # max_df (default 100 => <5k pairs/bucket) is an algebraic
-        # cap — the common case resolves to salt 1 with no probe
-        from kaflow_spark.operators.skew import choose_bucket_salt
-
-        bucket_salt = choose_bucket_salt(sel, ["gram"], known_cap=max_df)
-    if bucket_salt > 1:
-        from kaflow_spark.operators.skew import salted_self_pairs
-
-        cand = salted_self_pairs(sel, ["gram"], "_mid", salt=bucket_salt)
-    else:
-        a = sel.select(F.col("_mid").alias("id_a"), "gram")
-        b = sel.select(F.col("_mid").alias("id_b"), "gram")
-        cand = a.join(b, "gram").filter(F.col("id_a") < F.col("id_b"))
+    # max_df (default 100 => <5k pairs/bucket) is an algebraic cap —
+    # the common case resolves to salt 1 with no probe
+    cand = bucket_pairs(sel, ["gram"], "_mid", known_cap=max_df)
     return (
         cand.groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("shared"))
@@ -1640,7 +1532,6 @@ def near_dup_pairs(
     *,
     method: str = "minhash",
     threshold: float = 0.9,
-    bucket_salt: int | str = "auto",
 ) -> DataFrame:
     """One-call near-duplicate PAIR detection: candidate generation by
     ``method``, then the shared exact char-5-gram Jaccard verify at
@@ -1660,18 +1551,13 @@ def near_dup_pairs(
     Returns ``(id_a, id_b, jaccard)`` with ``id_a < id_b``.  The
     verify stage makes precision exact for every method; they differ
     only in candidate-generation cost profile and recall argument —
-    pick by corpus shape (see each generator's docstring).
-
-    ``bucket_salt`` (minhash method only) forwards to
-    :func:`minhash_lsh_candidates`'s triangle-salted bucket join —
-    the boilerplate-heavy-corpus skew fallback (identical output)."""
+    pick by corpus shape (see each generator's docstring)."""
     d = df
     if method == "minhash":
         sh = shingle_frame(d, id_col, text_col, 5)
         cand = (
             minhash_lsh_candidates(
-                d, id_col, text_col, min_bands=2, shingles=sh,
-                bucket_salt=bucket_salt,
+                d, id_col, text_col, min_bands=2, shingles=sh
             )
             .filter(F.col("est_jaccard") >= F.lit(max(0.0, threshold - 0.2)))
             .select("id_a", "id_b")

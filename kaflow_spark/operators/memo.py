@@ -28,10 +28,14 @@ of them live in one registry, keyed and released the same way:
   concurrent stages race on not-yet-cached partitions, each
   recomputing them (on clusters too, not only in local mode).
 - **Released by owner.** :func:`release` unpersists every frame one
-  owner registered and returns how many. Call it after rewriting data
-  a frame was built over (the ``catalog.clear_load_cache``
-  discipline). Unkeyed values are registered too, so a frame built
-  without a key never outlives its owner's release.
+  owner registered and returns how many were still cached. Call it
+  after rewriting data a frame was built over (the
+  ``catalog.clear_load_cache`` discipline). Unkeyed values are
+  registered too, so a frame built without a key never outlives its
+  owner's release.
+- **Survives ``clearCache``.** A registered frame that is no longer
+  cached counts as a miss: the next caller rebuilds, persists and
+  re-registers it instead of getting an unpersisted frame back.
 
 ``catalog._LOAD_CACHE`` is not here: it holds unpersisted plans, and
 it is keyed by the session object because ``catalog.load`` sets
@@ -62,14 +66,25 @@ def plan_key(df: DataFrame, *params) -> tuple | None:
         return None
 
 
+def _cached(value: DataFrame) -> bool:
+    """False for a frame that is no longer cached (a
+    ``catalog.clearCache()`` or a direct ``unpersist()`` dropped it)."""
+    level = value.storageLevel
+    return level.useMemory or level.useDisk
+
+
 def memoized(owner: str, key: tuple | None, make: Callable[[], Any]) -> Any:
     """The value registered under ``(owner, key)``; ``make()`` builds
-    and registers it on a miss. A None key never hits."""
+    and registers it on a miss. A None key never hits, and neither
+    does a registered frame that is no longer cached: handing it back
+    would make every consumer silently recompute its lineage."""
     values = _MEMO.setdefault(owner, {})
     if key is None:
         key = (object(),)
     elif key in values:
-        return values[key]
+        value = values[key]
+        if not isinstance(value, DataFrame) or _cached(value):
+            return value
     value = values[key] = make()
     return value
 
@@ -88,13 +103,14 @@ def persisted(owner: str, key: tuple | None, build: Callable[[], DataFrame]) -> 
 
 def release(owner: str) -> int:
     """Drop everything ``owner`` registered; returns how many frames
-    were unpersisted."""
+    were still cached and got unpersisted."""
     n = 0
     for value in _MEMO.pop(owner, {}).values():
         if isinstance(value, DataFrame):
             try:
-                value.unpersist()
-                n += 1
+                if _cached(value):
+                    value.unpersist()
+                    n += 1
             except Exception:
                 pass
     return n

@@ -48,9 +48,7 @@ def deletion_variants(key_col: str) -> F.Column:
     return F.expr(_VARIANTS_SQL.replace("_k", f"`{key_col}`"))
 
 
-def edit_distance_pairs(
-    df: DataFrame, id_col: str, key_col: str, *, bucket_salt: int | str = "auto"
-) -> DataFrame:
+def edit_distance_pairs(df: DataFrame, id_col: str, key_col: str) -> DataFrame:
     """All pairs of rows whose ``key_col`` values are within
     Levenshtein distance 1 (including exact duplicates at distance 0).
 
@@ -60,16 +58,13 @@ def edit_distance_pairs(
     ``levenshtein`` verify makes precision exact, so a brute-force
     O(n²) oracle hash-checks the output end-to-end.
 
-    ``bucket_salt > 1`` routes the deletion-variant self-join through
-    :func:`~kaflow_spark.operators.skew.salted_self_pairs` — the
-    fallback for a massive equal-key (or one-typo-family) cohort
-    whose shared variant bucket exceeds a task's budget; AQE's skew
-    split skips this reused-exchange self-join (the measured MinHash
-    blockers). The raw keys ride as payload columns so the
-    Levenshtein verify needs no re-attach join; identical pair set by
-    construction (test-asserted).
+    A massive equal-key (or one-typo-family) cohort whose shared
+    variant bucket exceeds a task's budget salts automatically, with
+    the raw keys riding as payload: see
+    :func:`~kaflow_spark.operators.skew.bucket_pairs`.
     """
     from kaflow_spark.operators.parallelism import fan_out
+    from kaflow_spark.operators.skew import bucket_pairs
 
     base = fan_out(df, id_col).select(
         F.col(id_col).cast("bigint").alias("_id"), F.col(key_col).alias("_k")
@@ -77,51 +72,24 @@ def edit_distance_pairs(
     variants = base.select(
         "_id", "_k", F.explode(deletion_variants("_k")).alias("_v")
     )
-    if bucket_salt == "auto":
-        # deletion-variant buckets have no algebraic cap (a massive
-        # equal-key cohort shares every variant) — one linear
-        # max-bucket probe decides, memoized per (session, plan) so
-        # only the first invocation pays it. persist_keyed stays OFF
-        # here by measured A/B: the bare explode lineage is cheaper
-        # to recompute than to cache (cached join 1.28 s vs 0.83 s
-        # uncached at sf0.1; steady-state auto 0.78 vs salt=1 0.92)
-        from kaflow_spark.operators.skew import choose_bucket_salt
-
-        bucket_salt = choose_bucket_salt(variants, ["_v"])
-    if bucket_salt > 1:
-        from kaflow_spark.operators.skew import salted_self_pairs
-
-        cand = (
-            salted_self_pairs(
-                variants, ["_v"], "_id", salt=bucket_salt, payload_cols=["_k"]
-            )
-            .select(
-                "id_a",
-                "id_b",
-                F.col("_k_a").alias("key_a"),
-                F.col("_k_b").alias("key_b"),
-            )
-            .dropDuplicates(["id_a", "id_b"])
+    # deletion-variant buckets have no algebraic cap (a massive
+    # equal-key cohort shares every variant) — one linear max-bucket
+    # probe decides, memoized per (session, plan) so only the first
+    # invocation pays it. persist_keyed stays OFF here by measured A/B:
+    # the bare explode lineage is cheaper to recompute than to cache
+    # (cached join 1.28 s vs 0.83 s uncached at sf0.1; steady-state
+    # auto 0.78 vs salt=1 0.92). A pair can share several variants
+    # (e.g. adjacent equal characters); contract before the verify.
+    cand = (
+        bucket_pairs(variants, ["_v"], "_id", payload_cols=["_k"])
+        .select(
+            "id_a",
+            "id_b",
+            F.col("_k_a").alias("key_a"),
+            F.col("_k_b").alias("key_b"),
         )
-    else:
-        a = variants.select(
-            F.col("_id").alias("id_a"),
-            F.col("_k").alias("key_a"),
-            F.col("_v").alias("_v"),
-        )
-        b = variants.select(
-            F.col("_id").alias("id_b"),
-            F.col("_k").alias("key_b"),
-            F.col("_v").alias("_v"),
-        )
-        cand = (
-            a.join(b, ["_v"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            # a pair can share several variants (e.g. adjacent equal
-            # characters); contract before the verify join fan-out
-            .select("id_a", "id_b", "key_a", "key_b")
-            .dropDuplicates(["id_a", "id_b"])
-        )
+        .dropDuplicates(["id_a", "id_b"])
+    )
     # project the distance once, then filter on the projected column —
     # filtering on the raw expression would evaluate levenshtein twice
     lev = F.levenshtein(F.col("key_a"), F.col("key_b"))

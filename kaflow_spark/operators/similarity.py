@@ -355,7 +355,6 @@ def semantic_dup_pairs(
     n_lists: int = 16,
     assign_p: int = 2,
     seed: int = 42,
-    list_salt: int | str = "auto",
 ) -> DataFrame:
     """SemDeDup-style semantic near-duplicate pairs ``(id_a, id_b,
     cos)`` with exact cosine ≥ ``threshold`` — the embedding-space
@@ -382,13 +381,13 @@ def semantic_dup_pairs(
     O((n·p/L)²) — ``n_lists`` is the lever that bounds per-task cost
     (SemDeDup runs L≈50k on web-scale corpora so clusters fit a
     worker). A hot list (quantizer drift piling mass into one cell)
-    is handled like every lexical generator: ``list_salt='auto'``
-    probes the hottest list via the memoized
-    :func:`~kaflow_spark.operators.skew.choose_bucket_salt` and
-    routes the in-list Gram through triangle-salted cells — each row
-    hashes to a cell, every cell-pair forms an independent task, and
-    the kernel counts a pair only in the one task matching the pair's
-    own cells, so the output is salt-invariant by construction.
+    is handled like every lexical generator: the memoized
+    :func:`~kaflow_spark.operators.skew.choose_bucket_salt` probes the
+    hottest list, and its salt routes the in-list Gram through
+    triangle-salted cells — each row hashes to a cell, every
+    cell-pair forms an independent task, and the kernel counts a pair
+    only in the one task matching the pair's own cells, so the output
+    is salt-invariant by construction.
 
     Execution is Arrow-vectorized end to end: one matmul to assign,
     one normalized Gram matrix per (list, cell-pair) group emitting
@@ -407,10 +406,7 @@ def semantic_dup_pairs(
         F.col(vec_col).alias("_v"),
         F.explode("_ivf_lists").alias("_list"),
     )
-    if list_salt == "auto":
-        salt = choose_bucket_salt(exploded, ["_list"], persist_keyed=True)
-    else:
-        salt = max(1, int(list_salt))
+    salt = choose_bucket_salt(exploded, ["_list"], persist_keyed=True)
 
     # triangle replication (the salted_self_pairs construction): a row
     # in cell c participates in every cell-pair group containing c;

@@ -1,7 +1,7 @@
 """Skew-mitigation utilities.
 
 AQE's skew-join splitting handles most cases automatically (enabled in
-the session posture); these helpers cover the two patterns AQE can't:
+the session posture); these helpers cover the patterns AQE can't:
 
 - ``salted_aggregate``: high-cardinality-skewed GROUP BY (one hot key
   overwhelms a reducer). Two-phase: group on (key, salt) first — the
@@ -11,9 +11,14 @@ the session posture); these helpers cover the two patterns AQE can't:
   big to broadcast: replicate each dim row ``salt`` times, salt the
   fact side randomly, join on (key, salt) — the hot key's rows spread
   over ``salt`` partitions.
+- ``bucket_pairs``: the unordered-pair bucket self-join every
+  candidate generator blocks with, salted from the observed hottest
+  bucket (:func:`choose_bucket_salt`, :func:`salted_self_pairs`).
 """
 
 from __future__ import annotations
+
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -117,23 +122,23 @@ def choose_bucket_salt(
     keyed: DataFrame,
     key_cols: list[str],
     *,
-    target_pairs: int | None = None,
-    max_salt: int | None = None,
     known_cap: int | None = None,
     count_col: str | None = None,
     persist_keyed: bool = False,
 ) -> int:
-    """Pick ``bucket_salt`` for a pair-join generator from the actual
+    """Pick the salt for a bucket self-join from the actual
     hottest-bucket cardinality of its keyed frame (round-10 verdict:
     the salted fallback existed on every generator but nothing CHOSE
     it — an operator hitting a planted-boilerplate corpus with
     default arguments still funneled the hot bucket into one task).
+    The budget is :data:`AUTO_SALT_TARGET_PAIRS`, the clamp
+    :data:`AUTO_SALT_MAX`.
 
     Decision ladder, cheapest first:
 
     - ``known_cap``: when the caller already bounds bucket size (the
       MinHash ``max_bucket`` window filter, the minimizer ``max_df``
-      screen) and ``cap*(cap-1)/2 <= target_pairs``, no bucket CAN
+      screen) and ``cap*(cap-1)/2`` fits the budget, no bucket CAN
       exceed the task budget — return 1 with zero probe cost. This
       keeps the capped generators' default plans action-free and
       unchanged.
@@ -155,9 +160,8 @@ def choose_bucket_salt(
       itself has a ~1 s local floor — more than edit-distance's entire
       unsalted join. Re-invocations of a registry query rebuild an
       identical keyed plan, so every call after the first is
-      probe-free (steady-state auto == explicit salt, A/B-asserted in
-      test_sources_skew). Mirrors production: a recurring pipeline
-      profiles its corpus skew once, not per query.
+      probe-free. Mirrors production: a recurring pipeline profiles
+      its corpus skew once, not per query.
     - ``persist_keyed=True`` additionally persists the keyed frame,
       once per plan, so the first probe's action doubles as cache
       materialization and the pair join reads the cache instead of
@@ -173,12 +177,11 @@ def choose_bucket_salt(
       uncached) — it relies on the memo alone.
       :func:`release_probe_caches` frees the frames and the memo.
     - salt so each salted cell's pair work fits the budget:
-      ``ceil(hot / sqrt(2 * target_pairs))``, clamped to
-      ``[2, max_salt]`` (replication cost is salt+1 copies of the
-      short key rows — see :func:`salted_self_pairs`).
+      ``ceil(hot / sqrt(2 * target))``, clamped to ``[2, max]``
+      (replication cost is salt+1 copies of the short key rows — see
+      :func:`salted_self_pairs`).
     """
-    target = AUTO_SALT_TARGET_PAIRS if target_pairs is None else target_pairs
-    mx = AUTO_SALT_MAX if max_salt is None else max_salt
+    target, mx = AUTO_SALT_TARGET_PAIRS, AUTO_SALT_MAX
     if known_cap is not None and known_cap * (known_cap - 1) // 2 <= target:
         return 1
     plan = memo.plan_key(keyed)
@@ -208,14 +211,74 @@ def choose_bucket_salt(
     return memo.memoized("probe", None if plan is None else plan + knobs, probe)
 
 
+def bucket_pairs(
+    keyed: DataFrame,
+    key_cols: list[str],
+    id_col: str,
+    *,
+    payload_cols: Sequence[str] = (),
+    known_cap: int | None = None,
+    count_col: str | None = None,
+    persist_keyed: bool = False,
+) -> DataFrame:
+    """Every unordered pair of rows of ``keyed`` sharing a
+    ``key_cols`` bucket — the blocking self-join of every candidate
+    generator (MinHash bands, prefix tokens, Hamming projections,
+    winnowing fingerprints, deletion variants). Returns ``key_cols +
+    [id_a, id_b] + [c_a, c_b for c in payload_cols]``, each pair once
+    with ``id_a < id_b`` and each payload following its own id, so a
+    verify stage needs no re-attach join.
+
+    The salt is never the caller's: :func:`choose_bucket_salt` reads
+    it off the caller's algebraic bucket cap (``known_cap``) or the
+    observed hottest bucket; ``count_col`` and ``persist_keyed`` are
+    per-generator probe settings chosen by measurement (CLAUDE.md
+    trap 19). Salt 1 is the plain self-join built from the one keyed
+    frame, so the static plan keeps its single reused exchange. Above
+    1 the join goes through :func:`salted_self_pairs`: a bucket that
+    stays under the generator's cap but still dominates one reducer
+    (boilerplate-heavy corpora, a massive equal-key cohort) spreads
+    its quadratic pair work over ``salt*(salt+1)/2`` join keys. AQE's
+    skew-join split cannot rescue this join: the self-join reuses one
+    exchange, and the bucket-count windows some generators put
+    between shuffle and join block it too (both measured; see
+    test_sources_skew). The output is identical at every salt by
+    construction (test-asserted per generator); ~``salt``x
+    replication of the short key rows is the price."""
+    salt = choose_bucket_salt(
+        keyed,
+        key_cols,
+        known_cap=known_cap,
+        count_col=count_col,
+        persist_keyed=persist_keyed,
+    )
+    if salt > 1:
+        return salted_self_pairs(
+            keyed, key_cols, id_col, salt=salt, payload_cols=payload_cols
+        )
+    a, b = (
+        keyed.select(
+            *key_cols,
+            F.col(id_col).alias(f"id_{s}"),
+            *[F.col(c).alias(f"{c}_{s}") for c in payload_cols],
+        )
+        for s in "ab"
+    )
+    pairs = a.join(b, key_cols).filter(F.col("id_a") < F.col("id_b"))
+    return pairs.select(
+        *key_cols,
+        "id_a",
+        "id_b",
+        *[f"{c}_{s}" for c in payload_cols for s in "ab"],
+    )
+
+
 def salted_self_pairs(
     df: DataFrame,
     key_cols: list[str],
     id_col: str,
     salt: int = 8,
-    out_a: str = "id_a",
-    out_b: str = "id_b",
-    payload_cols: list[str] | None = None,
+    payload_cols: Sequence[str] = (),
 ) -> DataFrame:
     """Skew-safe UNORDERED-PAIR self-equi-join: all (a, b) id pairs
     sharing the ``key_cols`` bucket, each pair exactly once, with the
@@ -254,7 +317,6 @@ def salted_self_pairs(
     what lets verify-bearing generators (q146/q154/q159) salt their
     candidate join without a second join to re-attach attributes —
     re-attaching by id WOULD be another shuffle of the full id set."""
-    payload_cols = payload_cols or []
     g = F.pmod(F.xxhash64(F.col(id_col)), F.lit(salt))
     tagged = df.withColumn("_g", g)
     left = (
@@ -265,7 +327,7 @@ def salted_self_pairs(
             *key_cols,
             F.col("_g").alias("_ta"),
             "_tb",
-            F.col(id_col).alias(out_a),
+            F.col(id_col).alias("id_a"),
             *[F.col(c).alias(f"_pa_{c}") for c in payload_cols],
         )
     )
@@ -275,7 +337,7 @@ def salted_self_pairs(
             *key_cols,
             "_ta",
             F.col("_g").alias("_tb"),
-            F.col(id_col).alias(out_b),
+            F.col(id_col).alias("id_b"),
             *[F.col(c).alias(f"_pb_{c}") for c in payload_cols],
         )
     )
@@ -290,13 +352,13 @@ def salted_self_pairs(
         right.repartition(*full_key), full_key
     )
     kept = joined.filter(
-        (F.col("_ta") < F.col("_tb")) | (F.col(out_a) < F.col(out_b))
+        (F.col("_ta") < F.col("_tb")) | (F.col("id_a") < F.col("id_b"))
     )
-    swap = F.col(out_a) > F.col(out_b)
+    swap = F.col("id_a") > F.col("id_b")
     sel = [
         *key_cols,
-        F.least(out_a, out_b).alias(out_a),
-        F.greatest(out_a, out_b).alias(out_b),
+        F.least("id_a", "id_b").alias("id_a"),
+        F.greatest("id_a", "id_b").alias("id_b"),
     ]
     for c in payload_cols:
         sel.append(

@@ -24,7 +24,7 @@ State is the on-disk index itself (bounded by the corpus, like the
 batch layout) plus nothing driver-side; per-batch cost is the probed
 partitions only — p/L of the files for a single-list batch, bounded
 by the union of arrival lists. Hot-list salting (the batch path's
-``list_salt='auto'``) is not applied per micro-batch: arrival batches
+probe-chosen salt) is not applied per micro-batch: arrival batches
 are small by construction, and a persistently hot STORED list is an
 index-maintenance signal (``ivf_append_signal``), not a per-batch
 join problem.

@@ -836,7 +836,7 @@ def _activity_update(group_col, day_col, user_col, mode, span,
                 }
             )
         else:
-            out_d, out_a, out_r, out_bp = [], [], [], []
+            out_d, out_act, out_r, out_bp = [], [], [], []
             for d in observed:
                 active = {u for u, dd in pairs if dd == d}
                 returning = {
@@ -845,7 +845,7 @@ def _activity_update(group_col, day_col, user_col, mode, span,
                     if u in active and d - lookback <= dd <= d - 1
                 }
                 out_d.append(d)
-                out_a.append(len(active))
+                out_act.append(len(active))
                 out_r.append(len(returning))
                 # both operands non-negative: Python // == div here
                 out_bp.append(len(returning) * 10000 // len(active))
@@ -853,7 +853,7 @@ def _activity_update(group_col, day_col, user_col, mode, span,
                 {
                     group_col: key[0],
                     day_col: out_d,
-                    "n_active": out_a,
+                    "n_active": out_act,
                     "n_returning": out_r,
                     "returning_bp": out_bp,
                 }

@@ -74,6 +74,27 @@ def test_shingle_frame_memo_identity_rebuilt_plan(spark, tmp_path):
     assert not sh1.storageLevel.useMemory
 
 
+def test_memo_rebuilds_frame_dropped_by_clear_cache(spark, tmp_path):
+    """A ``clearCache`` unpersists every registered frame behind the
+    memo's back. The next call must rebuild and re-persist rather
+    than hand back the unpersisted frame (every consumer would
+    silently recompute the shingling), and release counts only frames
+    that were still cached."""
+    from kaflow_spark.operators import dedup
+
+    dedup.release_shingle_frames()
+    path = _docs(spark, tmp_path, "cdocs")
+    dedup.shingle_frame(spark.read.parquet(path), "doc_id", "text", 5)
+    spark.catalog.clearCache()
+    sh = dedup.shingle_frame(spark.read.parquet(path), "doc_id", "text", 5)
+    assert sh.storageLevel.useMemory
+    assert dedup.release_shingle_frames() == 1
+
+    dedup.shingle_frame(spark.read.parquet(path), "doc_id", "text", 5)
+    spark.catalog.clearCache()
+    assert dedup.release_shingle_frames() == 0
+
+
 def test_wordgram_shingle_frame_memoizes(spark, tmp_path):
     from kaflow_spark.operators import dedup
 

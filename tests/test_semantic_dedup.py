@@ -103,21 +103,36 @@ def test_semantic_pairs_recall_curve_on_fixture(spark, sf_dir):
     assert g8 == want  # the declared-query setting: recall 1
 
 
-def test_semantic_pairs_salt_invariant(spark):
+def test_semantic_pairs_salt_invariant(spark, monkeypatch):
     """The triangle-salted in-list Gram must emit each pair exactly
-    once regardless of salt — the own-cells group filter."""
+    once regardless of salt — the own-cells group filter. Salts 2 and
+    5 are forced through the auto-salt knobs: a one-pair budget makes
+    every list hot, and the clamp picks the salt."""
+    from kaflow_spark.operators import skew
     from kaflow_spark.operators.similarity import semantic_dup_pairs
 
+    chosen = []
+    real = skew.choose_bucket_salt
+
+    def spy(*args, **kw):
+        chosen.append(real(*args, **kw))
+        return chosen[-1]
+
+    monkeypatch.setattr(skew, "choose_bucket_salt", spy)
     df, rows, _ = _clustered_corpus(spark, n_clusters=3, per_cluster=30)
     want = _exact_pairs(rows, 0.9)
     for salt in (1, 2, 5):
+        if salt > 1:
+            monkeypatch.setattr(skew, "AUTO_SALT_TARGET_PAIRS", 1)
+            monkeypatch.setattr(skew, "AUTO_SALT_MAX", salt)
         got = {
             (r["id_a"], r["id_b"])
             for r in semantic_dup_pairs(
                 df, "vec_id", "embedding", threshold=0.9,
-                n_lists=4, assign_p=2, list_salt=salt,
+                n_lists=4, assign_p=2,
             ).collect()
         }
+        assert chosen[-1] == salt
         assert got == want, f"salt={salt}"
 
 

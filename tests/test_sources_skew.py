@@ -3,6 +3,7 @@ skew-mitigation utilities."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from kaflow_spark.operators.skew import key_histogram, salted_aggregate, salted_join
@@ -222,56 +223,6 @@ def test_salted_self_pairs_matches_plain_pair_join(spark):
         assert got == want, f"salt={salt}"
 
 
-def test_minhash_bucket_salt_spreads_boilerplate_bucket(spark):
-    """Round 9: planted boilerplate corpus (400 docs share a template
-    -> every band collides into one hot bucket). AQE's skew split
-    NEVER fires on the bucket self-join (reused exchange + the
-    bucket-cap window above the shuffle — the measured blockers), so
-    bucket_salt is the fallback: identical candidates, and the
-    executed join partitions on (band, bucket, tag, tag) — the hot
-    bucket subdivides across salt*(salt+1)/2 keys."""
-    from kaflow_spark.operators.dedup import minhash_lsh_candidates
-
-    boiler = spark.range(400).select(
-        F.col("id").alias("doc_id"),
-        F.concat(
-            F.lit("terms of service boilerplate " * 20),
-            F.col("id").cast("string"),
-        ).alias("text"),
-    )
-    uniq = spark.range(1000, 1800).select(
-        F.col("id").alias("doc_id"),
-        F.sha2(F.concat(F.col("id").cast("string"), F.lit("u")), 512).alias(
-            "text"
-        ),
-    )
-    docs = boiler.unionAll(uniq)
-    plain = minhash_lsh_candidates(docs, "doc_id", "text", min_bands=2)
-    salted = minhash_lsh_candidates(
-        docs, "doc_id", "text", min_bands=2, bucket_salt=4
-    )
-    a = sorted((r["id_a"], r["id_b"]) for r in plain.collect())
-    b = sorted((r["id_a"], r["id_b"]) for r in salted.collect())
-    # identical candidates; nearly the whole boilerplate family kept
-    # (suffix churn drops a handful of pairs below 2 shared bands)
-    assert a == b and len(a) >= 75_000
-    # the pair join's exchange carries the salt tags — assert on the
-    # STATIC planner (under AQE the executed string shows stages, not
-    # Exchange nodes; the CLAUDE.md trap-9 idiom)
-    import re
-
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        fresh = minhash_lsh_candidates(
-            docs, "doc_id", "text", min_bands=2, bucket_salt=4
-        )
-        txt = explain_str(fresh, "simple")
-        parts = re.findall(r"Exchange hashpartitioning\(([^)]*)\)", txt)
-        assert any("_ta" in p and "_tb" in p for p in parts), parts
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-
-
 def _salted_exchange_present(df) -> bool:
     """Static-planner check (CLAUDE.md trap 9: AQE hides Exchange
     nodes) that some join exchange carries the full salted key."""
@@ -302,62 +253,61 @@ def _boiler_docs(spark, n_boiler=300, n_uniq=500):
     return boiler.unionAll(uniq)
 
 
-def test_salted_self_pairs_payload_follows_canonicalization(spark):
-    """payload_cols contract: c_a always belongs to id_a, across the
-    swap the cross-slice canonicalization performs."""
-    from kaflow_spark.operators.skew import salted_self_pairs
+def _minhash_case(spark):
+    """Planted boilerplate corpus (400 docs share a template -> every
+    band collides into one hot bucket); nearly the whole boilerplate
+    family is kept (suffix churn drops a handful of pairs below 2
+    shared bands)."""
+    from kaflow_spark.operators.dedup import minhash_lsh_candidates
 
-    rows = [("b", i, f"attr{i}") for i in range(17)]
-    df = spark.createDataFrame(rows, "bucket string, id bigint, k string")
-    for salt in (2, 5):
-        out = salted_self_pairs(
-            df, ["bucket"], "id", salt=salt, payload_cols=["k"]
-        ).collect()
-        assert len(out) == 17 * 16 // 2
-        for r in out:
-            assert r["k_a"] == f"attr{r['id_a']}", r
-            assert r["k_b"] == f"attr{r['id_b']}", r
+    boiler = spark.range(400).select(
+        F.col("id").alias("doc_id"),
+        F.concat(
+            F.lit("terms of service boilerplate " * 20),
+            F.col("id").cast("string"),
+        ).alias("text"),
+    )
+    uniq = spark.range(1000, 1800).select(
+        F.col("id").alias("doc_id"),
+        F.sha2(F.concat(F.col("id").cast("string"), F.lit("u")), 512).alias(
+            "text"
+        ),
+    )
+    docs = boiler.unionAll(uniq)
+    return (
+        lambda: minhash_lsh_candidates(docs, "doc_id", "text", min_bands=2),
+        ("id_a", "id_b"),
+        75_000,
+    )
 
 
-def test_prefix_filter_bucket_salt_matches_plain(spark):
-    """q159's generator: identical candidate set salted vs plain on
-    the planted boilerplate corpus, and the salted join's exchange
-    carries the full (h, tag, tag) key."""
+def _prefix_case(spark):
+    """q159's generator: the set sizes ride the salted join as
+    payload."""
     from kaflow_spark.operators.dedup import (
         prefix_filter_candidates,
         wordgram_shingle_frame,
     )
 
     docs = _boiler_docs(spark)
-    sh = wordgram_shingle_frame(docs, "doc_id", "text", 5)
-    plain = prefix_filter_candidates(sh, 0.8)
-    salted = prefix_filter_candidates(sh, 0.8, bucket_salt=4)
-    a = sorted((r["id_a"], r["id_b"]) for r in plain.collect())
-    b = sorted((r["id_a"], r["id_b"]) for r in salted.collect())
-    assert a == b and len(a) >= 300 * 299 // 2  # boilerplate family kept
-
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        fresh = prefix_filter_candidates(
-            wordgram_shingle_frame(docs, "doc_id", "text", 5),
-            0.8,
-            bucket_salt=4,
-        )
-        assert _salted_exchange_present(fresh)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
+    return (
+        lambda: prefix_filter_candidates(
+            wordgram_shingle_frame(docs, "doc_id", "text", 5), 0.8
+        ),
+        ("id_a", "id_b"),
+        300 * 299 // 2,
+    )
 
 
-def test_minimizer_bucket_salt_matches_plain(spark):
-    """q164's generator: identical (pair, shared) set salted vs plain
-    — the shared-gram COUNT must survive salting, not just the pair
-    set — plus the salted-key plan assert."""
+def _minimizer_case(spark):
+    """q164's generator: the shared-gram COUNT must survive salting,
+    not just the pair set. The periodic _boiler_docs template has only
+    ~5 distinct word grams (cyclic rotations) — too few shared
+    fingerprints for the count threshold; this template has 40
+    distinct words, so every boilerplate pair shares dozens of
+    sub-max_df fingerprints."""
     from kaflow_spark.operators.dedup import minimizer_candidates
 
-    # the periodic _boiler_docs template has only ~5 distinct word
-    # grams (cyclic rotations) — too few shared fingerprints for the
-    # count threshold; this template has 40 distinct words, so every
-    # boilerplate pair shares dozens of sub-max_df fingerprints
     template = " ".join(f"tok{i}" for i in range(40))
     boiler = spark.range(300).select(
         F.col("id").alias("doc_id"),
@@ -373,58 +323,34 @@ def test_minimizer_bucket_salt_matches_plain(spark):
     )
     docs = boiler.unionAll(uniq)
     kw = dict(k=5, w=4, min_shared=3, max_df=400, unit="word")
-    plain = minimizer_candidates(docs, "doc_id", "text", **kw)
-    salted = minimizer_candidates(
-        docs, "doc_id", "text", bucket_salt=4, **kw
+    return (
+        lambda: minimizer_candidates(docs, "doc_id", "text", **kw),
+        ("id_a", "id_b", "shared"),
+        300 * 299 // 2,
     )
-    a = sorted(
-        (r["id_a"], r["id_b"], r["shared"]) for r in plain.collect()
-    )
-    b = sorted(
-        (r["id_a"], r["id_b"], r["shared"]) for r in salted.collect()
-    )
-    assert a == b and len(a) >= 300 * 299 // 2
-
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        fresh = minimizer_candidates(
-            docs, "doc_id", "text", bucket_salt=4, **kw
-        )
-        assert _salted_exchange_present(fresh)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
 
 
-def test_hamming_bucket_salt_matches_plain(spark):
-    """q146's blocking: a one-typo family (equal keys + single
-    substitutions) is exactly the hot legitimate bucket the salt
-    subdivides; identical (pair, hamming) output."""
+def _hamming_case(spark):
+    """q146's blocking: a one-typo family (120 ids share 'AAAAAAAA',
+    40 more differ in one position) is exactly the hot legitimate
+    bucket the salt subdivides; the raw keys ride as payload."""
     from kaflow_spark.operators.dedup import hamming_pairs
 
-    # 120 ids share key 'AAAAAAAA'; 40 more differ in one position
     rows = [(i, "AAAAAAAA") for i in range(120)] + [
         (200 + i, "AAAA" + c + "AAA")
         for i, c in enumerate("BCDEFGHIJKLMNOPQRSTUVWXYZbcdefghijklmn")
     ]
     df = spark.createDataFrame(rows, "id bigint, k string")
-    plain = hamming_pairs(df, "id", "k", max_dist=1)
-    salted = hamming_pairs(df, "id", "k", max_dist=1, bucket_salt=4)
-    a = sorted((r["id_a"], r["id_b"], r["hamming"]) for r in plain.collect())
-    b = sorted((r["id_a"], r["id_b"], r["hamming"]) for r in salted.collect())
-    assert a == b and len(a) >= 120 * 119 // 2
-
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        assert _salted_exchange_present(
-            hamming_pairs(df, "id", "k", max_dist=1, bucket_salt=4)
-        )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
+    return (
+        lambda: hamming_pairs(df, "id", "k", max_dist=1),
+        ("id_a", "id_b", "hamming"),
+        120 * 119 // 2,
+    )
 
 
-def test_edit_distance_bucket_salt_matches_plain(spark):
-    """q154's generator: identical (pair, lev) output salted vs plain
-    on an equal-key cohort plus deletion/substitution neighbors."""
+def _edit_distance_case(spark):
+    """q154's generator: an equal-key cohort plus deletion and
+    substitution neighbors."""
     from kaflow_spark.operators.resolution import edit_distance_pairs
 
     rows = (
@@ -433,19 +359,71 @@ def test_edit_distance_bucket_salt_matches_plain(spark):
         + [(400 + i, f"Unique#{i:06d}") for i in range(30)]
     )
     df = spark.createDataFrame(rows, "id bigint, name string")
-    plain = edit_distance_pairs(df, "id", "name")
-    salted = edit_distance_pairs(df, "id", "name", bucket_salt=4)
-    a = sorted((r["id_a"], r["id_b"], r["lev"]) for r in plain.collect())
-    b = sorted((r["id_a"], r["id_b"], r["lev"]) for r in salted.collect())
-    assert a == b and len(a) >= 80 * 79 // 2
+    return (
+        lambda: edit_distance_pairs(df, "id", "name"),
+        ("id_a", "id_b", "lev"),
+        80 * 79 // 2,
+    )
 
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        assert _salted_exchange_present(
-            edit_distance_pairs(df, "id", "name", bucket_salt=4)
-        )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
+
+_GENERATOR_CASES = {
+    "minhash": _minhash_case,
+    "prefix": _prefix_case,
+    "minimizer": _minimizer_case,
+    "hamming": _hamming_case,
+    "edit_distance": _edit_distance_case,
+}
+
+
+@pytest.mark.parametrize("generator", list(_GENERATOR_CASES))
+def test_generator_auto_salt_matches_plain(spark, monkeypatch, generator):
+    """Every blocking generator joins through operators.skew's one
+    bucket_pairs. Under the default budget the planted hot bucket
+    fits (minhash/minimizer by their algebraic cap, with no probe), so
+    the static plan keeps the plain join. With the budget tightened
+    the SAME call comes back salted — AQE's skew split never fires on
+    these self-joins (reused exchange + the bucket-count window above
+    the shuffle, the measured blockers) — with identical rows (pair
+    set plus the per-pair count/distance), and the join exchange
+    partitions on the full salted key. Asserted on the STATIC planner:
+    under AQE the executed string shows stages, not Exchange nodes
+    (the CLAUDE.md trap-9 idiom)."""
+    from kaflow_spark.operators import skew
+
+    build, cols, min_rows = _GENERATOR_CASES[generator](spark)
+
+    def rows():
+        return sorted(tuple(r[c] for c in cols) for r in build().collect())
+
+    def static_plan_salted() -> bool:
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        try:
+            return _salted_exchange_present(build())
+        finally:
+            spark.conf.set("spark.sql.adaptive.enabled", "true")
+
+    assert not static_plan_salted()
+    plain = rows()
+    monkeypatch.setattr(skew, "AUTO_SALT_TARGET_PAIRS", 1000)
+    assert rows() == plain and len(plain) >= min_rows
+    assert static_plan_salted()
+
+
+def test_salted_self_pairs_payload_follows_canonicalization(spark):
+    """payload_cols contract: c_a always belongs to id_a, across the
+    swap the cross-slice canonicalization performs."""
+    from kaflow_spark.operators.skew import salted_self_pairs
+
+    rows = [("b", i, f"attr{i}") for i in range(17)]
+    df = spark.createDataFrame(rows, "bucket string, id bigint, k string")
+    for salt in (2, 5):
+        out = salted_self_pairs(
+            df, ["bucket"], "id", salt=salt, payload_cols=["k"]
+        ).collect()
+        assert len(out) == 17 * 16 // 2
+        for r in out:
+            assert r["k_a"] == f"attr{r['id_a']}", r
+            assert r["k_b"] == f"attr{r['id_b']}", r
 
 
 def test_salted_self_pairs_randomized_property(spark):
@@ -494,7 +472,7 @@ def test_salted_self_pairs_randomized_property(spark):
 # ---- round 11: auto-salt trigger ----------------------------------------
 
 
-def test_choose_bucket_salt_policy(spark):
+def test_choose_bucket_salt_policy(spark, monkeypatch):
     """The ladder: algebraic cap -> no probe at all; hot bucket under
     the pair budget -> 1; over it -> ceil(hot / sqrt(2*target)),
     clamped to [2, max]."""
@@ -521,111 +499,16 @@ def test_choose_bucket_salt_policy(spark):
     )
     assert skew.choose_bucket_salt(counted, ["k"], count_col="_bn") == 2
     # tight budget drives the salt up, clamp holds
-    assert 2 <= skew.choose_bucket_salt(df, ["k"], target_pairs=50) <= 32
-    assert skew.choose_bucket_salt(df, ["k"], target_pairs=50, max_salt=4) == 4
-
-
-def test_prefix_filter_auto_salts_planted_boilerplate(spark, monkeypatch):
-    """Round-11 verdict item: with DEFAULT arguments (no bucket_salt
-    from the caller) the planted boilerplate corpus must come back
-    salted — pair set identical to the plain join, salted key on the
-    join exchange. Budget tightened so the 300-doc template trips it
-    at fixture scale."""
-    from kaflow_spark.operators import skew
-    from kaflow_spark.operators.dedup import (
-        prefix_filter_candidates,
-        wordgram_shingle_frame,
-    )
-
-    monkeypatch.setattr(skew, "AUTO_SALT_TARGET_PAIRS", 1000)
-    docs = _boiler_docs(spark)
-    sh = wordgram_shingle_frame(docs, "doc_id", "text", 5)
-    auto = prefix_filter_candidates(sh, 0.8)  # defaults only
-    plain = prefix_filter_candidates(sh, 0.8, bucket_salt=1)
-    a = sorted((r["id_a"], r["id_b"]) for r in auto.collect())
-    b = sorted((r["id_a"], r["id_b"]) for r in plain.collect())
-    assert a == b and len(a) >= 300 * 299 // 2
-
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        fresh = prefix_filter_candidates(
-            wordgram_shingle_frame(docs, "doc_id", "text", 5),
-            0.8,
-        )
-        assert _salted_exchange_present(fresh)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-
-
-def test_edit_distance_auto_salts_equal_key_cohort(spark, monkeypatch):
-    from kaflow_spark.operators import skew
-    from kaflow_spark.operators.resolution import edit_distance_pairs
-
-    monkeypatch.setattr(skew, "AUTO_SALT_TARGET_PAIRS", 1000)
-    rows = [(i, "Customer#1234") for i in range(90)] + [
-        (400 + i, f"Unique#{i:06d}") for i in range(30)
-    ]
-    df = spark.createDataFrame(rows, "id bigint, name string")
-    auto = edit_distance_pairs(df, "id", "name")  # defaults only
-    plain = edit_distance_pairs(df, "id", "name", bucket_salt=1)
-    a = sorted((r["id_a"], r["id_b"], r["lev"]) for r in auto.collect())
-    b = sorted((r["id_a"], r["id_b"], r["lev"]) for r in plain.collect())
-    assert a == b and len(a) >= 90 * 89 // 2
-
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        assert _salted_exchange_present(edit_distance_pairs(df, "id", "name"))
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-
-
-def test_hamming_auto_salts_equal_key_cohort(spark, monkeypatch):
-    from kaflow_spark.operators import skew
-    from kaflow_spark.operators.dedup import hamming_pairs
-
-    monkeypatch.setattr(skew, "AUTO_SALT_TARGET_PAIRS", 1000)
-    rows = [(i, "AAAAAAAA") for i in range(120)] + [
-        (500 + i, f"{i:08d}") for i in range(40)
-    ]
-    df = spark.createDataFrame(rows, "id bigint, k string")
-    auto = hamming_pairs(df, "id", "k", max_dist=1)  # defaults only
-    plain = hamming_pairs(df, "id", "k", max_dist=1, bucket_salt=1)
-    a = sorted((r["id_a"], r["id_b"], r["hamming"]) for r in auto.collect())
-    b = sorted((r["id_a"], r["id_b"], r["hamming"]) for r in plain.collect())
-    assert a == b and len(a) >= 120 * 119 // 2
-
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        assert _salted_exchange_present(hamming_pairs(df, "id", "k", max_dist=1))
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-
-
-def test_capped_generators_stay_probe_free_and_unsalted(spark):
-    """minhash (max_bucket=1000) and minimizer (max_df=100) defaults
-    are algebraically under the pair budget: auto resolves to salt 1
-    with no extra aggregation, and the plain-join plan is preserved
-    (no salted exchange)."""
-    from kaflow_spark.operators.dedup import (
-        minhash_lsh_candidates,
-        minimizer_candidates,
-    )
-
-    docs = _boiler_docs(spark, n_boiler=30, n_uniq=60)
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        mh = minhash_lsh_candidates(docs, "doc_id", "text", min_bands=2)
-        assert not _salted_exchange_present(mh)
-        mc = minimizer_candidates(docs, "doc_id", "text", unit="word")
-        assert not _salted_exchange_present(mc)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
+    monkeypatch.setattr(skew, "AUTO_SALT_TARGET_PAIRS", 50)
+    assert 2 <= skew.choose_bucket_salt(df, ["k"]) <= 32
+    monkeypatch.setattr(skew, "AUTO_SALT_MAX", 4)
+    assert skew.choose_bucket_salt(df, ["k"]) == 4
 
 
 # ---- round 12: probe memoization + cached-lineage probes -----------------
 
 
-def test_choose_bucket_salt_memoizes_per_plan(spark, tmp_path):
+def test_choose_bucket_salt_memoizes_per_plan(spark, tmp_path, monkeypatch):
     """Round-11 verdict item 1: the auto-salt probe's action re-ran
     the generator's keyed lineage as a separate job (+45-73%
     steady-state on hamming/edit-distance). The fix is two-part —
@@ -656,7 +539,9 @@ def test_choose_bucket_salt_memoizes_per_plan(spark, tmp_path):
     probe_memo[memo_key] = 7  # poison: only a memo hit returns 7
     assert skew.choose_bucket_salt(keyed(), ["k"]) == 7
     # a different knob is a different decision -> fresh probe
-    assert skew.choose_bucket_salt(keyed(), ["k"], target_pairs=50) > 7
+    with monkeypatch.context() as m:
+        m.setattr(skew, "AUTO_SALT_TARGET_PAIRS", 50)
+        assert skew.choose_bucket_salt(keyed(), ["k"]) > 7
     # release clears the memo -> fresh probe restores the honest value
     skew.release_probe_caches()
     assert skew.choose_bucket_salt(keyed(), ["k"]) == 2

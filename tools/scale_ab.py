@@ -1,16 +1,19 @@
-"""Equal-quietness old-vs-new A/B of declared queries at scale.
+"""Equal-quietness old-vs-new A/B of declared queries.
 
 Runs a list of declared queries (noop sink, labeled jobs, bench
-session posture) against a given data dir and prints one JSON line of
-per-query run times. The OLD shape comes from a git worktree of the
-pre-rewrite tree: pass ``--repo /root/repo-r13`` and this script puts
-that tree FIRST on sys.path before importing kaflow_spark, so the
-r13-close implementations run unmodified. Interleave at process level
-(old pass, new pass, repeat) for equal quietness; judge per-query
-minima across passes.
+session posture: warmed workers, fixture tables pre-registered)
+against a given data dir and prints one JSON line of per-query run
+times. The OLD shape comes from a checkout of the parent tree: pass
+``--repo DIR`` and this script puts that tree FIRST on sys.path before
+importing kaflow_spark, so the old implementations run unmodified.
+Interleave at process level (old pass, new pass, repeat) for equal
+quietness; judge per-query minima across passes. ``--plans DIR``
+also writes each query's formatted plan to ``DIR/<q>_<suffix>.txt``
+(``--no-time`` writes the plans only).
 
-    python tools/scale_ab.py --sf-dir /root/scale10 --tag new q116 q133 ...
-    python tools/scale_ab.py --repo /root/repo-r13 --sf-dir /root/scale10 --tag old q116 ...
+    python tools/scale_ab.py --sf-dir SF_DIR --tag new q116 q133 ...
+    python tools/scale_ab.py --repo OLD_TREE --sf-dir SF_DIR --tag old q116 ...
+    python tools/scale_ab.py --sf-dir SF_DIR --plans plans/r14 --suffix before --no-time q148
 """
 
 from __future__ import annotations
@@ -29,11 +32,15 @@ def main() -> int:
     ap.add_argument("--sf-dir", default="/root/scale10")
     ap.add_argument("--n", type=int, default=2, help="timed runs per query (after 1 warm run)")
     ap.add_argument("--tag", default="run")
+    ap.add_argument("--plans", default=None, help="directory to write <q>_<suffix>.txt explain output")
+    ap.add_argument("--suffix", default="before")
+    ap.add_argument("--no-time", action="store_true", help="plans only, skip timed runs")
     args = ap.parse_args()
 
     repo = args.repo or os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     sys.path.insert(0, repo)
 
+    from kaflow_spark.plans.explain import explain_str  # noqa: E402
     from kaflow_spark.queries import REGISTRY  # noqa: E402
     from kaflow_spark.session import get_spark, warm_python_workers  # noqa: E402
 
@@ -57,6 +64,14 @@ def main() -> int:
 
     out: dict[str, list[float]] = {}
     for name in names:
+        if args.plans:
+            os.makedirs(args.plans, exist_ok=True)
+            path = os.path.join(args.plans, f"{name}_{args.suffix}.txt")
+            with open(path, "w") as f:
+                f.write(explain_str(REGISTRY[name].spark(spark, args.sf_dir)))
+            print(f"# plan -> {path}", file=sys.stderr)
+        if args.no_time:
+            continue
         times = []
         for i in range(args.n + 1):
             spark.sparkContext.setJobDescription(f"{args.tag}:{name}:{i}")

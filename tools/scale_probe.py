@@ -1595,8 +1595,10 @@ def main() -> None:
         "which OptimizeSkewedJoin skips; and the bucket-cap window "
         "sits between shuffle and join, so the SMJ children are not "
         "bare shuffle stages — `skew=true` never appears). The "
-        "working fallback is minhash_lsh_candidates(bucket_salt=s) "
-        "-> operators.skew.salted_self_pairs: triangle-salted pair "
+        "working fallback is operators.skew.bucket_pairs, which "
+        "every blocking generator joins through and which picks the "
+        "salt s from the observed hottest bucket -> "
+        "operators.skew.salted_self_pairs: triangle-salted pair "
         "enumeration subdividing each hot bucket's quadratic work "
         "across s(s+1)/2 join keys (an EXPLICIT full-key repartition "
         "— subset co-partitioning would otherwise satisfy the join "
