@@ -366,17 +366,7 @@ def _edit_distance_case(spark):
     )
 
 
-_GENERATOR_CASES = {
-    "minhash": _minhash_case,
-    "prefix": _prefix_case,
-    "minimizer": _minimizer_case,
-    "hamming": _hamming_case,
-    "edit_distance": _edit_distance_case,
-}
-
-
-@pytest.mark.parametrize("generator", list(_GENERATOR_CASES))
-def test_generator_auto_salt_matches_plain(spark, monkeypatch, generator):
+def _assert_salt_invariant(spark, monkeypatch, case, *, salt=None):
     """Every blocking generator joins through operators.skew's one
     bucket_pairs. Under the default budget the planted hot bucket
     fits (minhash/minimizer by their algebraic cap, with no probe), so
@@ -385,12 +375,15 @@ def test_generator_auto_salt_matches_plain(spark, monkeypatch, generator):
     these self-joins (reused exchange + the bucket-count window above
     the shuffle, the measured blockers) — with identical rows (pair
     set plus the per-pair count/distance), and the join exchange
-    partitions on the full salted key. Asserted on the STATIC planner:
-    under AQE the executed string shows stages, not Exchange nodes
-    (the CLAUDE.md trap-9 idiom)."""
+    partitions on the full salted key. ``salt=None`` tightens the
+    budget to 1000 pairs and lets the policy pick the salt; an int
+    pins it (a one-pair budget clamps every hot bucket to
+    AUTO_SALT_MAX). Asserted on the STATIC planner: under AQE the
+    executed string shows stages, not Exchange nodes (the CLAUDE.md
+    trap-9 idiom)."""
     from kaflow_spark.operators import skew
 
-    build, cols, min_rows = _GENERATOR_CASES[generator](spark)
+    build, cols, min_rows = case
 
     def rows():
         return sorted(tuple(r[c] for c in cols) for r in build().collect())
@@ -404,9 +397,105 @@ def test_generator_auto_salt_matches_plain(spark, monkeypatch, generator):
 
     assert not static_plan_salted()
     plain = rows()
-    monkeypatch.setattr(skew, "AUTO_SALT_TARGET_PAIRS", 1000)
+    chosen = []
+    choose = skew.choose_bucket_salt
+
+    def spy(*args, **kwargs):
+        chosen.append(choose(*args, **kwargs))
+        return chosen[-1]
+
+    monkeypatch.setattr(skew, "choose_bucket_salt", spy)
+    if salt is None:
+        monkeypatch.setattr(skew, "AUTO_SALT_TARGET_PAIRS", 1000)
+    else:
+        monkeypatch.setattr(skew, "AUTO_SALT_TARGET_PAIRS", 1)
+        monkeypatch.setattr(skew, "AUTO_SALT_MAX", salt)
     assert rows() == plain and len(plain) >= min_rows
+    assert max(chosen) > 1 if salt is None else salt in chosen, chosen
     assert static_plan_salted()
+
+
+def test_minhash_bucket_salt_spreads_boilerplate_bucket(spark, monkeypatch):
+    """Planted boilerplate corpus at salt 4: the hot band bucket
+    subdivides across salt*(salt+1)/2 join keys with identical
+    candidates."""
+    _assert_salt_invariant(spark, monkeypatch, _minhash_case(spark), salt=4)
+
+
+def test_prefix_filter_bucket_salt_matches_plain(spark, monkeypatch):
+    _assert_salt_invariant(spark, monkeypatch, _prefix_case(spark), salt=4)
+
+
+def test_minimizer_bucket_salt_matches_plain(spark, monkeypatch):
+    _assert_salt_invariant(spark, monkeypatch, _minimizer_case(spark), salt=4)
+
+
+def test_hamming_bucket_salt_matches_plain(spark, monkeypatch):
+    _assert_salt_invariant(spark, monkeypatch, _hamming_case(spark), salt=4)
+
+
+def test_edit_distance_bucket_salt_matches_plain(spark, monkeypatch):
+    _assert_salt_invariant(
+        spark, monkeypatch, _edit_distance_case(spark), salt=4
+    )
+
+
+def test_prefix_filter_auto_salts_planted_boilerplate(spark, monkeypatch):
+    """With default arguments the planted boilerplate corpus comes
+    back salted once the budget is tightened so the 300-doc template
+    trips it at fixture scale."""
+    _assert_salt_invariant(spark, monkeypatch, _prefix_case(spark))
+
+
+def test_edit_distance_auto_salts_equal_key_cohort(spark, monkeypatch):
+    from kaflow_spark.operators.resolution import edit_distance_pairs
+
+    rows = [(i, "Customer#1234") for i in range(90)] + [
+        (400 + i, f"Unique#{i:06d}") for i in range(30)
+    ]
+    df = spark.createDataFrame(rows, "id bigint, name string")
+    case = (
+        lambda: edit_distance_pairs(df, "id", "name"),
+        ("id_a", "id_b", "lev"),
+        90 * 89 // 2,
+    )
+    _assert_salt_invariant(spark, monkeypatch, case)
+
+
+def test_hamming_auto_salts_equal_key_cohort(spark, monkeypatch):
+    from kaflow_spark.operators.dedup import hamming_pairs
+
+    rows = [(i, "AAAAAAAA") for i in range(120)] + [
+        (500 + i, f"{i:08d}") for i in range(40)
+    ]
+    df = spark.createDataFrame(rows, "id bigint, k string")
+    case = (
+        lambda: hamming_pairs(df, "id", "k", max_dist=1),
+        ("id_a", "id_b", "hamming"),
+        120 * 119 // 2,
+    )
+    _assert_salt_invariant(spark, monkeypatch, case)
+
+
+def test_capped_generators_stay_probe_free_and_unsalted(spark):
+    """minhash (max_bucket=1000) and minimizer (max_df=100) defaults
+    are algebraically under the pair budget: the salt resolves to 1
+    with no extra aggregation, and the plain-join plan is preserved
+    (no salted exchange)."""
+    from kaflow_spark.operators.dedup import (
+        minhash_lsh_candidates,
+        minimizer_candidates,
+    )
+
+    docs = _boiler_docs(spark, n_boiler=30, n_uniq=60)
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        mh = minhash_lsh_candidates(docs, "doc_id", "text", min_bands=2)
+        assert not _salted_exchange_present(mh)
+        mc = minimizer_candidates(docs, "doc_id", "text", unit="word")
+        assert not _salted_exchange_present(mc)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
 
 
 def test_salted_self_pairs_payload_follows_canonicalization(spark):
